@@ -260,6 +260,9 @@ def build_postings_frame(
     # posting list.  Postings content is byte-identical (same groups,
     # same per-group rows — pinned by the parity check in
     # tests/test_r07_optimizations.py and the determinism suite).
+    # a posting with doc_id >= n_docs (a stale n_docs) is clamped into the
+    # last salt: td_by_salt holds only salts 0..n_salts-1, so a higher salt
+    # would silently vanish in the inner join below
     n_salts = max((n_docs - 1) // docs_per_salt + 1, 1)
     hot_terms = term_dict.filter(
         F.col("df") > F.lit(salt_df_threshold)
@@ -270,7 +273,10 @@ def build_postings_frame(
             "salt",
             F.when(
                 F.col("_hot"),
-                (F.col("doc_id") / F.lit(docs_per_salt)).cast("long"),
+                F.least(
+                    (F.col("doc_id") / F.lit(docs_per_salt)).cast("long"),
+                    F.lit(n_salts - 1).cast("long"),
+                ),
             ).otherwise(F.lit(0).cast("long")),
         )
         .drop("_hot")

@@ -19,6 +19,14 @@ with DataFrame plans:
   * top-k             → orderBy(score desc, doc_id asc).limit(k) — Spark
                         compiles this to TakeOrderedAndProject (bounded
                         per-partition heaps + driver merge, no global sort)
+  * driver path       → the same block kernels run in the driver over a
+                        pyarrow read and return a sorted LocalRelation (no
+                        Spark job for top-k or empty results), chosen at plan
+                        time when the driving df fits in one block (≤ meta
+                        block_size: summed df of a term/OR/regex/spans leaf,
+                        of the rarest clause of an AND/phrase/chain) and the
+                        row groups to read fit in one task's split
+                        (≤ spark.sql.files.maxPartitionBytes, from the footers)
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -30,12 +38,16 @@ from __future__ import annotations
 
 import heapq
 import json
+import math
 import os
 from dataclasses import dataclass
-from typing import Iterator
+from functools import partial
+from types import SimpleNamespace
+from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,10 +56,377 @@ from blacklab_spark import codecs, scoring
 from blacklab_spark.build import IndexPaths
 from blacklab_spark.plans.parser import AndQuery, OrQuery, PhraseQuery, parse_query
 
-_DECODED_SCHEMA = "term_id long, doc_id long, contrib double"
+_SCORES = "doc_id long, score double"
 _DECODED_POS_SCHEMA = (
     "term_id long, doc_id long, tf int, dl int, positions array<long>"
 )
+_EMPTY_SCORES = pd.DataFrame(
+    {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
+)
+# key packing for the positions-chain kernel: within one doc-range
+# partition, key = (doc_id - lo) * 2^33 + (start + 2^32). Safe while
+# (n_docs / shuffle.partitions) < 2^30 — at 10^12 docs a cluster run
+# sets spark.sql.shuffle.partitions >= ~10^4, keeping rel-doc < 10^8.
+_PC_DOC_MULT = np.int64(1) << 33
+_PC_POS_BIAS = np.int64(1) << 32
+
+
+def local_frame(spark: SparkSession, schema: str, data=None) -> DataFrame:
+    """Driver-built rows (pandas or Arrow; empty when None) as a
+    LocalRelation: collect() and limit() on it run no Spark job, unlike
+    createDataFrame([]), whose LogicalRDD costs a job per action."""
+    st = T.DataType.fromDDL(schema)
+    if data is None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        data = to_arrow_schema(st).empty_table()
+    elif isinstance(data, pd.DataFrame):
+        data = pa.Table.from_pandas(data, preserve_index=False)
+    return spark.createDataFrame(data, st)
+
+
+# ------------------------------------------------------------- kernels --
+# Block kernels: posting blocks in, result rows out. The Spark UDFs and the
+# driver path (Corpus._driver_blocks) call these same functions, so both
+# paths return bit-identical rows.
+
+def _member(cands: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Mask of `d` values present in the sorted array `cands`."""
+    idx = np.searchsorted(cands, d)
+    m = idx < cands.size
+    m &= np.where(m, cands[np.minimum(idx, cands.size - 1)] == d, False)
+    return m
+
+
+def _blocks_holding(g: pd.DataFrame, cands: np.ndarray) -> pd.DataFrame:
+    """The blocks whose [first_doc_id, last_doc_id] window holds a candidate."""
+    li = np.searchsorted(cands, g["first_doc_id"].to_numpy())
+    keep = li < cands.size
+    keep &= np.where(
+        keep, cands[np.minimum(li, cands.size - 1)] <= g["last_doc_id"].to_numpy(),
+        False,
+    )
+    return g[keep]
+
+
+def decode_scores(batches, idf: float, avgdl: float, k: int | None):
+    """One term's blocks (pandas batches) → (doc_id, score). With k:
+    block-max WAND — blocks are visited in descending block_max_score order
+    and skipped once the bounded top-k heap's floor exceeds the block's
+    bound; the heap is flushed ONCE at the end (per-batch flushes would
+    duplicate docs)."""
+    heap: list[tuple[float, int]] = []
+    for pdf in batches:
+        if k is not None:
+            pdf = pdf.sort_values("block_max_score", ascending=False)
+        out = []
+        for row in pdf.itertuples():  # loop over BLOCKS, not postings
+            if k is not None and len(heap) >= k and row.block_max_score < heap[0][0]:
+                continue  # block-max prune: bound can't beat current k-th
+            d, t, l = codecs.decode_block(row._asdict())
+            score = scoring.bm25(t, l, avgdl, idf)
+            if k is None:
+                out.append(pd.DataFrame({"doc_id": d, "score": score}))
+                continue
+            for s, doc in zip(score, d):
+                item = (float(s), -int(doc))
+                if len(heap) < k:
+                    heapq.heappush(heap, item)
+                elif item > heap[0]:
+                    heapq.heapreplace(heap, item)
+        if out:
+            yield pd.concat(out, ignore_index=True)
+    if heap:
+        yield pd.DataFrame({
+            "doc_id": np.array([-x[1] for x in heap], dtype="int64"),
+            "score": np.array([x[0] for x in heap], dtype="float64"),
+        })
+
+
+def decode_position_blocks(batches):
+    """Blocks (Arrow batches) → (term_id, doc_id, tf, dl, positions). The
+    per-doc position lists are ONE ListArray built from (offsets =
+    cumsum(tf), values = vectorized varint decode) — no Python list objects,
+    so stop-word phrases decode at memory speed."""
+    for rb in batches:
+        tids, docs, tfs_a, dls_a, vals = [], [], [], [], []
+        for blk in rb.to_pylist():
+            d, t, l = codecs.decode_block(blk)
+            vals.append(codecs.decode_positions(blk["positions"], t))
+            tids.append(np.full(len(d), blk["term_id"], dtype="int64"))
+            docs.append(d)
+            tfs_a.append(t)
+            dls_a.append(l)
+        if not docs:
+            continue
+        tf_all = np.concatenate(tfs_a)
+        offsets = np.concatenate(([0], np.cumsum(tf_all))).astype("int32")
+        positions = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(np.concatenate(vals), pa.int64())
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate(tids), pa.int64()),
+                pa.array(np.concatenate(docs), pa.int64()),
+                pa.array(tf_all.astype("int32"), pa.int32()),
+                pa.array(np.concatenate(dls_a).astype("int32"), pa.int32()),
+                positions,
+            ],
+            names=["term_id", "doc_id", "tf", "dl", "positions"],
+        )
+
+
+def _decode_group(g, lo, hi, idf, avgdl):
+    """Decode one term's blocks, keep docs in [lo, hi) → (doc_id, bm25)."""
+    dd, tt, ll = zip(*(codecs.decode_block(r._asdict()) for r in g.itertuples()))
+    d = np.concatenate(dd)
+    m = (d >= lo) & (d < hi)
+    return d[m], scoring.bm25(
+        np.concatenate(tt)[m], np.concatenate(ll)[m], avgdl, idf
+    )
+
+
+def _fold_topk(parts, key2_per_part, kk):
+    """parts: [(d, contrib)]; key2_per_part: the (gid, t_ord) or t_ord sort
+    key arrays aligned with parts — exact LEFT fold per doc in key order,
+    then optional local top-k."""
+    d = np.concatenate([p[0] for p in parts])
+    c = np.concatenate([p[1] for p in parts])
+    keys = [np.concatenate(col) for col in zip(*key2_per_part)]
+    srt = np.lexsort(tuple(reversed(keys)) + (d,))
+    d, c = d[srt], c[srt]
+    ud, starts, counts = np.unique(d, return_index=True, return_counts=True)
+    score = np.zeros(ud.size, dtype=np.float64)
+    for j in range(int(counts.max())):
+        sel = counts > j
+        score[sel] += c[starts[sel] + j]
+    if kk is not None and ud.size > kk:
+        topk = np.lexsort((ud, -score))[:kk]
+        ud, score = ud[topk], score[topk]
+    return pd.DataFrame({"doc_id": ud.astype("int64"), "score": score})
+
+
+def score_range_or(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One doc range's blocks → OR scores (block-max WAND when p.prune)."""
+    rng = int(pdf["rng"].iloc[0])
+    lo, hi = rng * p.R, (rng + 1) * p.R
+    by_term = {int(tid): g for tid, g in pdf.groupby("term_id")}
+    ub = {tid: float(g["block_max_score"].max()) for tid, g in by_term.items()}
+    sum_ub = sum(ub.values())
+    theta = -math.inf
+    parts, keys = [], []
+    order = sorted(by_term, key=lambda tid: (p.df_map[tid], p.t_ord[tid]))
+    for tid in order:
+        g = by_term[tid]
+        if p.prune and theta > -math.inf:
+            slack = abs(theta) * 1e-12 + 1e-12  # fp-safety margin
+            bound = g["block_max_score"].to_numpy() + (sum_ub - ub[tid])
+            g = g[bound >= theta - slack]
+        if len(g) == 0:
+            continue
+        d, contrib = _decode_group(g, lo, hi, p.idf_map[tid], p.avgdl)
+        if d.size == 0:
+            continue
+        parts.append((d, contrib))
+        keys.append((np.full(d.size, p.t_ord[tid], dtype=np.int64),))
+        if p.prune:
+            # θ update: k-th best accumulated partial. Order-free sums
+            # are fine here — θ only gates pruning, never a reported
+            # score (those are re-folded exactly below).
+            ad = np.concatenate([q[0] for q in parts])
+            ac = np.concatenate([q[1] for q in parts])
+            udq, inv = np.unique(ad, return_inverse=True)
+            if udq.size >= p.kk:
+                sums = np.zeros(udq.size)
+                np.add.at(sums, inv, ac)
+                theta = float(np.partition(sums, udq.size - p.kk)[udq.size - p.kk])
+    if not parts:
+        return _EMPTY_SCORES
+    return _fold_topk(parts, keys, p.kk)
+
+
+def score_range_and(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One doc range's blocks → conjunction-of-groups scores; the rarest
+    group's docs are the candidates every later term's blocks must hold."""
+    rng = int(pdf["rng"].iloc[0])
+    lo, hi = rng * p.R, (rng + 1) * p.R
+    by_term = {int(tid): g for tid, g in pdf.groupby("term_id")}
+    cands = None
+    decoded: dict[int, tuple] = {}
+    for gi in p.group_proc_order:
+        tids = [t for t in p.gid_terms[gi] if t in by_term]
+        gdocs = []
+        for tid in sorted(tids, key=lambda t: p.df_map[t]):
+            if tid not in decoded:
+                g = by_term[tid]
+                if cands is not None:
+                    if cands.size == 0:
+                        return _EMPTY_SCORES
+                    g = _blocks_holding(g, cands)
+                    if len(g) == 0:
+                        decoded[tid] = (
+                            np.zeros(0, dtype=np.int64),
+                            np.zeros(0, dtype=np.float64),
+                        )
+                        continue
+                d, contrib = _decode_group(g, lo, hi, p.idf_map[tid], p.avgdl)
+                if cands is not None and d.size:
+                    mb = _member(cands, d)
+                    d, contrib = d[mb], contrib[mb]
+                decoded[tid] = (d, contrib)
+            gdocs.append(decoded[tid][0])
+        gd = (
+            np.unique(np.concatenate(gdocs))
+            if gdocs else np.zeros(0, dtype=np.int64)
+        )
+        if gd.size == 0:
+            return _EMPTY_SCORES
+        cands = gd if cands is None else np.intersect1d(
+            cands, gd, assume_unique=True
+        )
+        if cands.size == 0:
+            return _EMPTY_SCORES
+    # score: every (group, matched-term) pair over the surviving docs
+    parts, keys = [], []
+    for gi, tids in enumerate(p.gid_terms):
+        for tid in tids:
+            d, contrib = decoded.get(
+                tid, (np.zeros(0, dtype=np.int64), np.zeros(0))
+            )
+            if d.size == 0:
+                continue
+            mb = _member(cands, d)
+            d, contrib = d[mb], contrib[mb]
+            if d.size == 0:
+                continue
+            parts.append((d, contrib))
+            keys.append((
+                np.full(d.size, gi, dtype=np.int64),
+                np.full(d.size, p.t_ord[tid], dtype=np.int64),
+            ))
+    if not parts:
+        return _EMPTY_SCORES
+    return _fold_topk(parts, keys, p.kk)
+
+
+def _chain_keys(g, lo, hi, cand, off, dl_out=None):
+    """Decode a clause term's blocks in [lo, hi) (and, given candidates,
+    only candidate docs) → packed (doc, position - off) keys. dl_out
+    collects (rel doc, dl) pairs when given."""
+    parts = []
+    for row in g.itertuples():
+        d, t, l = codecs.decode_block(row._asdict())
+        m = (d >= lo) & (d < hi)
+        if cand is not None:
+            m &= _member(cand, d)
+        if not m.any():
+            continue
+        if dl_out is not None:
+            dl_out.append(((d - lo)[m], l[m]))
+        vals = codecs.decode_positions(row.positions, t)
+        pm = np.repeat(m, t)
+        rel = np.repeat(d - lo, t)[pm]
+        parts.append(rel * _PC_DOC_MULT + (vals[pm] - off + _PC_POS_BIAS))
+    return parts
+
+
+def chain_range(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One doc range's blocks → the fixed-gap run's (doc_id, positions
+    [, dl]), or spans (doc_id, start, end) with a variable-gap tail:
+    rarest clause first, later clauses decode only blocks holding a
+    surviving candidate doc."""
+    DOC_MULT, POS_BIAS = _PC_DOC_MULT, _PC_POS_BIAS
+    rng = int(pdf["rng"].iloc[0])
+    lo, hi = rng * p.R, (rng + 1) * p.R
+    by_tid = {
+        (int(lyr), int(tid)): g
+        for (lyr, tid), g in pdf[pdf["role"] == 0].groupby(["lyr", "term_id"])
+    }
+    running = None
+    dl_pairs = []  # exact dl, collected on the first clause
+    for ci, (lyr, tids) in enumerate(p.clause_keys):
+        cand = None
+        if running is not None:
+            cand = lo + np.unique(running // DOC_MULT)
+        parts = []
+        for tid in tids:
+            g = by_tid.get((lyr, tid))
+            if g is None:
+                continue
+            if cand is not None:
+                g = _blocks_holding(g, cand)
+            parts += _chain_keys(
+                g, lo, hi, cand, p.clause_offs[ci],
+                dl_pairs if p.with_dl and ci == 0 else None,
+            )
+        if not parts:
+            return p.empty
+        # multi-term clauses (regex expansions, synonyms) can repeat
+        # a (doc, position); unique also sorts for the intersect
+        keys = np.unique(np.concatenate(parts))
+        running = keys if running is None else np.intersect1d(
+            running, keys, assume_unique=True
+        )
+        if running.size == 0:
+            return p.empty
+    if p.tail_tids:
+        # the variable-gap tail, same decode + candidate skipping; one
+        # intersect per gap value, spans out
+        cand = lo + np.unique(running // DOC_MULT)
+        parts = []
+        for _, g in pdf[pdf["role"] == 1].groupby("term_id"):
+            parts += _chain_keys(_blocks_holding(g, cand), lo, hi, cand, 0)
+        if not parts:
+            return p.empty
+        tail_keys = np.unique(np.concatenate(parts))
+        outs = []
+        for s in p.shifts:
+            hit = np.intersect1d(running, tail_keys - s, assume_unique=True)
+            if hit.size:
+                doc_rel = hit // DOC_MULT
+                st = (hit - doc_rel * DOC_MULT) - POS_BIAS
+                outs.append(pd.DataFrame({
+                    "doc_id": (doc_rel + lo).astype("int64"),
+                    "start": st.astype("int32"),
+                    "end": (st + s + 1).astype("int32"),
+                }))
+        return pd.concat(outs, ignore_index=True) if outs else p.empty
+    doc_rel = running // DOC_MULT
+    start = (running - doc_rel * DOC_MULT) - POS_BIAS
+    ud, idx = np.unique(doc_rel, return_index=True)
+    out = {
+        "doc_id": (ud + lo).astype("int64"),
+        "positions": np.split(start.astype("int64"), idx[1:]),
+    }
+    if p.with_dl:
+        dd = np.concatenate([x[0] for x in dl_pairs])
+        ll = np.concatenate([x[1] for x in dl_pairs])
+        srt = np.argsort(dd)
+        dd, ll = dd[srt], ll[srt]
+        out["dl"] = ll[np.searchsorted(dd, ud)].astype("int32")
+    return pd.DataFrame(out)
+
+
+def _per_range(blocks: pd.DataFrame, R: int, kernel) -> list[pd.DataFrame]:
+    """The driver's run of a doc-range kernel: each block goes to every
+    range its [first_doc_id, last_doc_id] overlaps — the Spark stage's
+    explode(sequence(first // R, last // R)) — then the kernel runs once
+    per range."""
+    first = blocks["first_doc_id"].to_numpy() // R
+    n = blocks["last_doc_id"].to_numpy() // R - first + 1
+    step = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+    blocks = blocks.iloc[np.repeat(np.arange(len(blocks)), n)]
+    blocks = blocks.assign(rng=np.repeat(first, n) + step)
+    return [kernel(g) for _, g in blocks.groupby("rng")]
+
+
+def _top_k(scores: DataFrame, k: int) -> DataFrame:
+    """Top-k by (score desc, doc_id asc). A driver-path frame is already in
+    that order, so it takes only limit(k), which folds into its
+    LocalRelation (no Spark job)."""
+    if scores.isLocal():
+        return scores.limit(k)
+    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 @dataclass
@@ -144,11 +523,12 @@ class Corpus:
         from pyspark import StorageLevel
 
         self.lookup_terms([])  # populate the driver-side term-dict cache
+        self._postings_footers()  # and the driver path's file snapshot
         # Page-cache warm must READ the data pages: a bare count() is served
         # from parquet row-group metadata with an empty read schema and never
         # touches the postings bytes. Summing the binary column lengths
         # forces a full decode of every page exactly once.
-        self.spark.read.parquet(self.paths.postings).select(
+        self.postings.select(
             F.sum(
                 F.length("doc_gaps") + F.length("tfs") + F.length("dls")
                 + F.length("positions")
@@ -274,167 +654,108 @@ class Corpus:
         )
         return sorted(r["term"] for r in rows)
 
+    # --------------------------------------------------------- driver path --
+    def _driver_blocks(self, tids, cols: list[str], driving_df: int) -> pa.Table | None:
+        """The driver path's read: the blocks of `tids` through pyarrow, or
+        None when the query belongs on Spark. The driver takes a query only
+        when its driving postings (plan-time df) fit in one block AND the
+        row groups it must read fit in one Spark task's split
+        (spark.sql.files.maxPartitionBytes), so it never gives up scan
+        parallelism Spark would use."""
+        if driving_df > self.meta["block_size"]:
+            return None
+        dataset, lo, hi, nbytes = self._postings_footers()
+        if dataset is None:
+            return None
+        t = np.unique(np.asarray(tids, dtype=np.int64))
+        hit = np.searchsorted(t, lo) < np.searchsorted(t, hi, side="right")
+        conf = self.spark._jsparkSession.sessionState().conf()
+        if int(nbytes[hit].sum()) > conf.filesMaxPartitionBytes():
+            return None
+        import pyarrow.dataset as ds
+
+        return dataset.to_table(columns=cols, filter=ds.field("term_id").isin(t))
+
+    def _postings_footers(self) -> tuple:
+        """(pyarrow dataset, then per row group: term_id min, max, compressed
+        bytes) over the files self.postings resolved — read once per Corpus
+        from the parquet footers, so both paths read the same snapshot.
+        Dataset None (Spark path only) off the local filesystem."""
+        cached = getattr(self, "_footers", None)
+        if cached is None:
+            import pyarrow.dataset as ds
+            import pyarrow.parquet as pq
+
+            urls = [urlparse(u) for u in self.postings.inputFiles()]
+            cached = (None, None, None, None)
+            if urls and all(u.scheme in ("", "file") for u in urls):
+                groups = []
+                for u in urls:
+                    md = pq.read_metadata(u.path)
+                    col = md.schema.names.index("term_id")
+                    for rg in map(md.row_group, range(md.num_row_groups)):
+                        st = rg.column(col).statistics
+                        ok = st is not None and st.has_min_max
+                        groups.append((
+                            st.min if ok else -(2**63), st.max if ok else 2**63 - 1,
+                            sum(rg.column(j).total_compressed_size
+                                for j in range(rg.num_columns)),
+                        ))
+                lo, hi, nbytes = np.array(groups, dtype=np.int64).reshape(-1, 3).T
+                dataset = ds.dataset([u.path for u in urls], format="parquet")
+                cached = (dataset, lo, hi, nbytes)
+            self._footers = cached
+        return cached
+
+    def _scored_local(self, scores: pd.DataFrame, k: int | None = None) -> DataFrame:
+        """Driver-path scores as a LocalRelation in top-k order (score desc,
+        doc_id asc), cut at k."""
+        scores = scores.sort_values(["score", "doc_id"], ascending=[False, True])
+        return local_frame(self.spark, _SCORES, scores.iloc[:k])
+
     # ------------------------------------------------------------- decode --
     def _decoded_scores(self, tinfo: pd.DataFrame, k_hint: int | None = None) -> DataFrame:
-        """postings(filtered to query terms) → (term_id, doc_id, contrib).
-
-        Single-term queries with k_hint get partition-local block-max WAND:
-        blocks are visited in descending block_max_score order and skipped
-        once the local top-k heap's floor exceeds the next block's bound.
-        """
-        term_ids = [int(t) for t in tinfo["term_id"]]
-        idf_map = {
-            int(r.term_id): scoring.idf(self.n_docs, int(r.df))
-            for r in tinfo.itertuples()
-        }
-        avgdl = self.avgdl
+        """One term's postings → (doc_id, score) through decode_scores;
+        with k_hint, block-max WAND (partition-local on Spark)."""
+        tid, df = int(tinfo["term_id"].iloc[0]), int(tinfo["df"].iloc[0])
         # block-max bounds are stale after an incremental append (df/avgdl
         # moved) — prune only when the index is compacted (bounds fresh)
-        single_wand = (
-            k_hint is not None
-            and len(term_ids) == 1
-            and not self.meta.get("bounds_stale", False)
+        k = None if self.meta.get("bounds_stale", False) else k_hint
+        kernel = partial(
+            decode_scores, idf=scoring.idf(self.n_docs, df), avgdl=self.avgdl, k=k
         )
-        k = k_hint or 0
-
-        blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(
-            "term_id", "first_doc_id", "doc_gaps", "tfs", "dls", "block_max_score"
-        )
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # partition-local bounded min-heap of (score, -doc_id); flushed
-            # ONCE at partition end (per-batch flushes would duplicate docs)
-            heap: list[tuple[float, int]] = []
-            for pdf in batches:
-                if single_wand:
-                    pdf = pdf.sort_values("block_max_score", ascending=False)
-                out = []
-                for row in pdf.itertuples():  # loop over BLOCKS, not postings
-                    if single_wand and len(heap) >= k and row.block_max_score < heap[0][0]:
-                        continue  # block-max prune: bound can't beat current k-th
-                    d, t, l = codecs.decode_block({
-                        "first_doc_id": row.first_doc_id,
-                        "doc_gaps": row.doc_gaps,
-                        "tfs": row.tfs,
-                        "dls": row.dls,
-                    })
-                    contrib = scoring.bm25(t, l, avgdl, idf_map[int(row.term_id)])
-                    if single_wand:
-                        for s, doc in zip(contrib, d):
-                            item = (float(s), -int(doc))
-                            if len(heap) < k:
-                                heapq.heappush(heap, item)
-                            elif item > heap[0]:
-                                heapq.heapreplace(heap, item)
-                    else:
-                        out.append(pd.DataFrame({
-                            "term_id": np.full(len(d), row.term_id, dtype="int64"),
-                            "doc_id": d,
-                            "contrib": contrib,
-                        }))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-            if single_wand and heap:
-                yield pd.DataFrame({
-                    "term_id": np.full(len(heap), term_ids[0], dtype="int64"),
-                    "doc_id": np.array([-x[1] for x in heap], dtype="int64"),
-                    "contrib": np.array([x[0] for x in heap], dtype="float64"),
-                })
-
-        return blocks.mapInPandas(decode, schema=_DECODED_SCHEMA)
+        cols = ["first_doc_id", "doc_gaps", "tfs", "dls", "block_max_score"]
+        local = self._driver_blocks([tid], cols, df)
+        if local is not None:
+            return self._scored_local(
+                pd.concat([_EMPTY_SCORES, *kernel([local.to_pandas()])])
+            )
+        blocks = self.postings.filter(F.col("term_id") == tid).select(*cols)
+        return blocks.mapInPandas(kernel, schema=_SCORES)
 
     def _decoded_positions(self, tinfo: pd.DataFrame) -> DataFrame:
-        """postings → (term_id, doc_id, tf, dl, positions) for phrase matching.
-
-        Arrow-native: the per-doc position lists are emitted as ONE ListArray
-        built from (offsets = cumsum(tf), values = vectorized varint decode) —
-        no Python list objects, so stop-word phrases decode at memory speed.
-        """
+        """postings → (term_id, doc_id, tf, dl, positions) for phrase
+        matching, through decode_position_blocks."""
         term_ids = [int(t) for t in tinfo["term_id"]]
-        blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(
-            "term_id", "first_doc_id", "doc_gaps", "tfs", "dls", "positions"
-        )
-
-        def decode(batches):
-            import pyarrow as pa
-
-            for rb in batches:
-                names = {n: i for i, n in enumerate(rb.schema.names)}
-                tid_col = rb.column(names["term_id"]).to_numpy(zero_copy_only=False)
-                first_col = rb.column(names["first_doc_id"]).to_numpy(zero_copy_only=False)
-                gaps_col = rb.column(names["doc_gaps"])
-                tfs_col = rb.column(names["tfs"])
-                dls_col = rb.column(names["dls"])
-                pos_col = rb.column(names["positions"])
-                tids, docs, tfs_a, dls_a, vals = [], [], [], [], []
-                for i in range(rb.num_rows):
-                    d, t, l = codecs.decode_block({
-                        "first_doc_id": int(first_col[i]),
-                        "doc_gaps": gaps_col[i].as_py(),
-                        "tfs": tfs_col[i].as_py(),
-                        "dls": dls_col[i].as_py(),
-                    })
-                    vals.append(codecs.decode_positions(pos_col[i].as_py(), t))
-                    tids.append(np.full(len(d), tid_col[i], dtype="int64"))
-                    docs.append(d)
-                    tfs_a.append(t)
-                    dls_a.append(l)
-                if not docs:
-                    continue
-                tf_all = np.concatenate(tfs_a)
-                offsets = np.concatenate(([0], np.cumsum(tf_all))).astype("int32")
-                positions = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(np.concatenate(vals), pa.int64())
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(tids), pa.int64()),
-                        pa.array(np.concatenate(docs), pa.int64()),
-                        pa.array(tf_all.astype("int32"), pa.int32()),
-                        pa.array(np.concatenate(dls_a).astype("int32"), pa.int32()),
-                        positions,
-                    ],
-                    names=["term_id", "doc_id", "tf", "dl", "positions"],
-                )
-
-        return blocks.mapInArrow(decode, schema=_DECODED_POS_SCHEMA)
+        cols = ["term_id", "first_doc_id", "doc_gaps", "tfs", "dls", "positions"]
+        local = self._driver_blocks(term_ids, cols, int(tinfo["df"].sum()))
+        if local is not None:
+            out = list(decode_position_blocks(local.to_batches()))
+            return local_frame(
+                self.spark, _DECODED_POS_SCHEMA,
+                pa.Table.from_batches(out) if out else None,
+            )
+        blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(*cols)
+        return blocks.mapInArrow(decode_position_blocks, schema=_DECODED_POS_SCHEMA)
 
     # ----------------------------------------------------- postings leaves --
-    def term_postings(self, term: str) -> DataFrame:
-        """Postings walk: (doc_id, tf) for one term, decoded from the inverted
-        index — the leaf BlackLab reads via PostingsEnum (/root/reference/
-        engine/src/main/java/nl/inl/blacklab/search/lucene/BLSpanTermQuery.java),
-        NOT a full-corpus re-tokenize scan."""
-        tinfo = self.lookup_terms([term])
-        if tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, tf int")
-        blocks = self.postings.filter(
-            F.col("term_id").isin([int(t) for t in tinfo["term_id"]])
-        ).select("first_doc_id", "doc_gaps", "tfs", "dls")
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples():
-                    d, t, _ = codecs.decode_block({
-                        "first_doc_id": row.first_doc_id,
-                        "doc_gaps": row.doc_gaps,
-                        "tfs": row.tfs,
-                        "dls": row.dls,
-                    })
-                    out.append(pd.DataFrame({"doc_id": d, "tf": t.astype("int32")}))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        return blocks.mapInPandas(decode, schema="doc_id long, tf int")
-
     def term_positions(self, term: str) -> DataFrame:
         """(doc_id, tf, positions array<long>) for one term from the
         positional postings (positions ascending per doc)."""
         tinfo = self.lookup_terms([term])
         if tinfo.empty:
-            return self.spark.createDataFrame(
-                [], "doc_id long, tf int, positions array<long>"
+            return local_frame(
+                self.spark, "doc_id long, tf int, positions array<long>"
             )
         return self._decoded_positions(tinfo).select("doc_id", "tf", "positions")
 
@@ -459,7 +780,7 @@ class Corpus:
         size a Python-decoded side; we can)."""
         tinfo = self.lookup_terms(terms)
         if tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, start int, end int")
+            return local_frame(self.spark, "doc_id long, start int, end int")
         out = (
             self._decoded_positions(tinfo)
             .select("doc_id", F.explode("positions").alias("p"))
@@ -482,9 +803,7 @@ class Corpus:
         (one row per doc, so sequence joins shuffle docs, not positions)."""
         tinfo = self.lookup_terms(terms)
         if tinfo.empty:
-            return self.spark.createDataFrame(
-                [], "doc_id long, positions array<long>"
-            )
+            return local_frame(self.spark, "doc_id long, positions array<long>")
         dec = self._decoded_positions(tinfo).select("doc_id", "positions")
         if len(tinfo) == 1:
             return dec
@@ -493,13 +812,6 @@ class Corpus:
                 F.array_distinct(F.flatten(F.collect_list("positions")))
             ).alias("positions")
         )
-
-    # key packing for the positions-chain kernel: within one doc-range
-    # partition, key = (doc_id - lo) * 2^33 + (start + 2^32). Safe while
-    # (n_docs / shuffle.partitions) < 2^30 — at 10^12 docs a cluster run
-    # sets spark.sql.shuffle.partitions >= ~10^4, keeping rel-doc < 10^8.
-    _PC_DOC_MULT = np.int64(1) << 33
-    _PC_POS_BIAS = np.int64(1) << 32
 
     def positions_chain(
         self,
@@ -563,7 +875,7 @@ class Corpus:
             ti = layers[lyr].lookup_terms(terms)
             tids = [int(t) for t in ti["term_id"]]
             if not tids:  # a vocab-miss clause empties the whole chain
-                return self.spark.createDataFrame([], out_schema)
+                return local_frame(self.spark, out_schema)
             infos.append((int(ti["df"].sum()), lyr, tids, int(off)))
             tids_by_layer.setdefault(lyr, set()).update(tids)
         infos.sort(key=lambda t: (t[0], t[3]))
@@ -578,25 +890,61 @@ class Corpus:
             tti = layers[tail_lyr].lookup_terms(t_terms)
             tail_tids = [int(t) for t in tti["term_id"]]
             if not tail_tids:
-                return self.spark.createDataFrame([], out_schema)
+                return local_frame(self.spark, out_schema)
             shifts = [t_width + g for g in range(t_gmin, t_gmax + 1)]
         n_ranges = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         R = max(1, -(-self.n_docs // n_ranges))
-        DOC_MULT, POS_BIAS = self._PC_DOC_MULT, self._PC_POS_BIAS
-        if R >= int(DOC_MULT >> 3):
+        if R >= int(_PC_DOC_MULT >> 3):
             raise ValueError(
                 "positions_chain: docs-per-range too large for key packing; "
                 "raise spark.sql.shuffle.partitions"
             )
-        clause_keys = [(lyr, tids) for _, lyr, tids, _ in infos]
-        clause_offs = [off for _, _, _, off in infos]
+        if vargap_tail is not None:
+            empty = pd.DataFrame({
+                "doc_id": pd.Series(dtype="int64"),
+                "start": pd.Series(dtype="int32"),
+                "end": pd.Series(dtype="int32"),
+            })
+        else:
+            empty = pd.DataFrame({
+                "doc_id": pd.Series(dtype="int64"),
+                "positions": pd.Series(dtype="object"),
+                **({"dl": pd.Series(dtype="int32")} if with_dl else {}),
+            })
+        # plain data only: the kernel must not capture vargap_tail (it may
+        # hold a Corpus → SparkContext)
+        p = SimpleNamespace(
+            R=R, clause_keys=[(lyr, tids) for _, lyr, tids, _ in infos],
+            clause_offs=[off for _, _, _, off in infos], with_dl=with_dl,
+            tail_tids=tail_tids, shifts=shifts, empty=empty,
+        )
 
-        def _blocks(lyr, tids, role):
-            return layers[lyr].postings.filter(
-                F.col("term_id").isin(sorted(tids))
-            ).select(
-                "term_id", "first_doc_id", "last_doc_id",
-                "doc_gaps", "tfs", "dls", "positions",
+        def kernel(pdf):  # not a partial: applyInPandas warns on those
+            return chain_range(p, pdf)
+
+        # a term can serve both a prefix clause AND the tail — its blocks
+        # are read once per role
+        reads = [(0, lyr, sorted(tids)) for lyr, tids in sorted(tids_by_layer.items())]
+        if tail_tids:
+            reads.append((1, tail_lyr, tail_tids))
+        cols = ["term_id", "first_doc_id", "last_doc_id", "doc_gaps", "tfs", "dls",
+                "positions"]
+        # the driving df is the rarest clause's (infos is df-sorted)
+        local = [
+            layers[lyr]._driver_blocks(tids, cols, infos[0][0])
+            for _, lyr, tids in reads
+        ]
+        if all(t is not None for t in local):
+            blocks = pd.concat([
+                t.to_pandas().assign(role=role, lyr=lyr)
+                for t, (role, lyr, _) in zip(local, reads)
+            ], ignore_index=True)
+            parts = _per_range(blocks, R, kernel)
+            return local_frame(self.spark, out_schema, pd.concat([empty, *parts]))
+
+        def _blocks(role, lyr, tids):
+            return layers[lyr].postings.filter(F.col("term_id").isin(tids)).select(
+                *cols,
                 F.explode(
                     F.sequence(
                         F.floor(F.col("first_doc_id") / F.lit(R)),
@@ -607,172 +955,9 @@ class Corpus:
                 F.lit(lyr).alias("lyr"),
             )
 
-        blocks = None
-        for lyr, tids in sorted(tids_by_layer.items()):
-            b = _blocks(lyr, tids, 0)
-            blocks = b if blocks is None else blocks.unionByName(b)
-        if tail_tids:
-            # a term can serve both a prefix clause AND the tail — emit its
-            # blocks once per role
-            blocks = blocks.unionByName(_blocks(tail_lyr, tail_tids, 1))
-        if vargap_tail is not None:
-            empty_pdf = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "start": pd.Series(dtype="int32"),
-                "end": pd.Series(dtype="int32"),
-            })
-        else:
-            empty_pdf = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "positions": pd.Series(dtype="object"),
-                **({"dl": pd.Series(dtype="int32")} if with_dl else {}),
-            })
-
-        def chain_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * R, (rng + 1) * R
-            by_tid = {
-                (int(lyr), int(tid)): g
-                for (lyr, tid), g in
-                pdf[pdf["role"] == 0].groupby(["lyr", "term_id"])
-            }
-
-            def member(cands, d):
-                idx = np.searchsorted(cands, d)
-                m = idx < cands.size
-                m &= np.where(m, cands[np.minimum(idx, cands.size - 1)] == d, False)
-                return m
-
-            running = None
-            dl_docs, dl_vals = [], []  # exact dl, collected on the first clause
-            for ci, (lyr, tids) in enumerate(clause_keys):
-                off = clause_offs[ci]
-                cand = None
-                if running is not None:
-                    if running.size == 0:
-                        return empty_pdf
-                    cand = lo + np.unique(running // DOC_MULT)
-                parts = []
-                for tid in tids:
-                    g = by_tid.get((lyr, tid))
-                    if g is None:
-                        continue
-                    if cand is not None:
-                        fi = g["first_doc_id"].to_numpy()
-                        la = g["last_doc_id"].to_numpy()
-                        li = np.searchsorted(cand, fi)
-                        keep = li < cand.size
-                        keep &= np.where(
-                            keep, cand[np.minimum(li, cand.size - 1)] <= la, False
-                        )
-                        g = g[keep]
-                        if len(g) == 0:
-                            continue
-                    for row in g.itertuples():
-                        d, t, l = codecs.decode_block({
-                            "first_doc_id": row.first_doc_id,
-                            "doc_gaps": row.doc_gaps,
-                            "tfs": row.tfs,
-                            "dls": row.dls,
-                        })
-                        m = (d >= lo) & (d < hi)
-                        if cand is not None:
-                            m &= member(cand, d)
-                        if not m.any():
-                            continue
-                        if with_dl and ci == 0:
-                            dl_docs.append((d - lo)[m])
-                            dl_vals.append(l[m])
-                        vals = codecs.decode_positions(row.positions, t)
-                        pm = np.repeat(m, t)
-                        rel = np.repeat(d - lo, t)[pm]
-                        parts.append(
-                            rel * DOC_MULT + (vals[pm] - off + POS_BIAS)
-                        )
-                if not parts:
-                    return empty_pdf
-                keys = np.concatenate(parts)
-                # multi-term clauses (regex expansions, synonyms) can repeat
-                # a (doc, position); unique also sorts for the intersect
-                keys = np.unique(keys)
-                running = keys if running is None else np.intersect1d(
-                    running, keys, assume_unique=True
-                )
-                if running.size == 0:
-                    return empty_pdf
-            if tail_tids:  # plain-data flag: the closure must not capture
-                #            vargap_tail (it may hold a Corpus → SparkContext)
-                # the variable-gap tail, same decode + candidate skipping;
-                # one intersect per gap value, spans out
-                cand = lo + np.unique(running // DOC_MULT)
-                parts = []
-                tby = tail_by_tid(pdf)  # one groupby, reused across tail terms
-                for tid in tail_tids:
-                    g = tby.get(tid)
-                    if g is None:
-                        continue
-                    fi = g["first_doc_id"].to_numpy()
-                    la = g["last_doc_id"].to_numpy()
-                    li = np.searchsorted(cand, fi)
-                    keep = li < cand.size
-                    keep &= np.where(
-                        keep, cand[np.minimum(li, cand.size - 1)] <= la, False
-                    )
-                    g = g[keep]
-                    for row in g.itertuples():
-                        d, t, _l = codecs.decode_block({
-                            "first_doc_id": row.first_doc_id,
-                            "doc_gaps": row.doc_gaps,
-                            "tfs": row.tfs,
-                            "dls": row.dls,
-                        })
-                        m = (d >= lo) & (d < hi) & member(cand, d)
-                        if not m.any():
-                            continue
-                        vals = codecs.decode_positions(row.positions, t)
-                        pm = np.repeat(m, t)
-                        rel = np.repeat(d - lo, t)[pm]
-                        parts.append(rel * DOC_MULT + vals[pm] + POS_BIAS)
-                if not parts:
-                    return empty_pdf
-                tail_keys = np.unique(np.concatenate(parts))
-                outs = []
-                for s in shifts:
-                    hit = np.intersect1d(
-                        running, tail_keys - s, assume_unique=True
-                    )
-                    if hit.size:
-                        doc_rel = hit // DOC_MULT
-                        st = (hit - doc_rel * DOC_MULT) - POS_BIAS
-                        outs.append(pd.DataFrame({
-                            "doc_id": (doc_rel + lo).astype("int64"),
-                            "start": st.astype("int32"),
-                            "end": (st + s + 1).astype("int32"),
-                        }))
-                if not outs:
-                    return empty_pdf
-                return pd.concat(outs, ignore_index=True)
-            doc_rel = running // DOC_MULT
-            start = (running - doc_rel * DOC_MULT) - POS_BIAS
-            ud, idx = np.unique(doc_rel, return_index=True)
-            out = {
-                "doc_id": (ud + lo).astype("int64"),
-                "positions": np.split(start.astype("int64"), idx[1:]),
-            }
-            if with_dl:
-                dd = np.concatenate(dl_docs)
-                ll = np.concatenate(dl_vals)
-                srt = np.argsort(dd)
-                dd, ll = dd[srt], ll[srt]
-                out["dl"] = ll[np.searchsorted(dd, ud)].astype("int32")
-            return pd.DataFrame(out)
-
-        def tail_by_tid(pdf):
-            return {
-                int(tid): g
-                for tid, g in pdf[pdf["role"] == 1].groupby("term_id")
-            }
-
+        blocks = _blocks(*reads[0])
+        for r in reads[1:]:
+            blocks = blocks.unionByName(_blocks(*r))
         # r7 (guide §2.5 "stragglers"/AQE interaction): the compressed-block
         # shuffle is tiny (a few MB), so AQE's partition coalescing merged
         # the n_ranges reduce partitions down to 1-5 tasks and the Python
@@ -782,7 +967,7 @@ class Corpus:
         # one kernel task per doc range.
         return (
             blocks.repartition(n_ranges, "rng")
-            .groupBy("rng").applyInPandas(chain_range, schema=out_schema)
+            .groupBy("rng").applyInPandas(kernel, schema=out_schema)
         )
 
     def spans_chain_vargap(
@@ -804,26 +989,6 @@ class Corpus:
             vargap_tail=(tail_terms, width, gap_min, gap_max, tail_corpus),
         )
 
-    def spans_seq_terms(
-        self, term_a: str, term_b: str, gap_min: int = 0, gap_max: int = 0
-    ) -> DataFrame:
-        """Fast path for `A []{gap} B` over two single terms: join the two
-        PER-DOC POSITION ARRAYS (one row per doc per term — a docs-sized
-        shuffle) and intersect shifted arrays JVM-side, instead of exploding
-        every position of both terms into the join (a positions-sized
-        shuffle). The same trick score_phrase uses, generalized to a gap
-        range; for stop-word sequences this is the difference between
-        shuffling millions of hit rows and thousands of doc rows. The CQL
-        compiler generalizes this via positions_of_terms +
-        operators.spans.seq_positions_* to whole chains of arbitrary
-        single-position clauses."""
-        from blacklab_spark.operators import spans as S
-
-        return S.seq_positions_pair(
-            self.positions_of_terms([term_a]), 1,
-            self.positions_of_terms([term_b]), gap_min, gap_max,
-        )
-
     # -------------------------------------------------------------- query --
     def score_or(self, terms: list[str], k: int | None = None) -> DataFrame:
         """Multi-term OR (BooleanQuery SHOULD): per-doc sum of BM25 in
@@ -836,18 +1001,13 @@ class Corpus:
     def _score_or(self, terms: list[str], k: int | None = None) -> DataFrame:
         tinfo = self.lookup_terms(terms)
         if tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, _SCORES)
         if len(tinfo) == 1:
-            decoded = self._decoded_scores(tinfo, k_hint=k)
-            return decoded.select("doc_id", F.col("contrib").alias("score"))
+            return self._decoded_scores(tinfo, k_hint=k)
         return self._range_scores(tinfo, k, conjunctive=False)
 
     def search_or(self, terms: list[str], k: int = 10) -> DataFrame:
-        return (
-            self.score_or(terms, k=k)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top_k(self.score_or(terms, k=k), k)
 
     def _range_scores(
         self,
@@ -889,48 +1049,55 @@ class Corpus:
         scoring, then either a TakeOrderedAndProject over (n_ranges × k) rows
         (k given) or a plain union of per-range results.
         """
-        import math as _math
-
         term_ids = [int(t) for t in tinfo["term_id"]]
-        idf_map = {
-            int(r.term_id): scoring.idf(self.n_docs, int(r.df))
-            for r in tinfo.itertuples()
-        }
         df_map = {int(r.term_id): int(r.df) for r in tinfo.itertuples()}
         tid_by_term = {r.term: int(r.term_id) for r in tinfo.itertuples()}
-        # fold order = ascending term string (float64 parity contract)
-        t_ord = {
-            int(r.term_id): i
-            for i, r in enumerate(tinfo.sort_values("term").itertuples())
-        }
-        if conjunctive and groups is None:
-            groups = [[t] for t in sorted(tinfo["term"])]
-        gid_terms = None
-        group_proc_order = None
+        p = SimpleNamespace(
+            df_map=df_map,
+            idf_map={t: scoring.idf(self.n_docs, df) for t, df in df_map.items()},
+            # fold order = ascending term string (float64 parity contract)
+            t_ord={
+                int(r.term_id): i
+                for i, r in enumerate(tinfo.sort_values("term").itertuples())
+            },
+            avgdl=self.avgdl,
+            kk=int(k) if k is not None else None,
+            # stale bounds after an append: block_max_score is no longer an
+            # upper bound, so WAND pruning is off (scores stay exact regardless)
+            prune=(
+                k is not None and not conjunctive
+                and not self.meta.get("bounds_stale", False)
+            ),
+        )
+        # the driving df: all terms for OR, the rarest group for AND
+        driving = sum(df_map.values())
         if conjunctive:
-            gid_terms = [
+            if groups is None:
+                groups = [[t] for t in sorted(tinfo["term"])]
+            p.gid_terms = [
                 sorted({tid_by_term[t] for t in g if t in tid_by_term})
                 for g in groups
             ]
             # rarest group first builds the candidate set fastest
-            group_proc_order = sorted(
-                range(len(gid_terms)),
-                key=lambda gi: sum(df_map[t] for t in gid_terms[gi]),
-            )
-        avgdl = self.avgdl
-        # stale bounds after an append: block_max_score is no longer an upper
-        # bound, so WAND pruning is off (scores stay exact regardless)
-        prune = (
-            k is not None and not conjunctive
-            and not self.meta.get("bounds_stale", False)
-        )
+            g_df = [sum(df_map[t] for t in g) for g in p.gid_terms]
+            p.group_proc_order = sorted(range(len(g_df)), key=g_df.__getitem__)
+            driving = min(g_df)
         n_ranges = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        R = max(1, -(-self.n_docs // n_ranges))
-        kk = int(k) if k is not None else None
+        p.R = R = max(1, -(-self.n_docs // n_ranges))
+        fn = score_range_and if conjunctive else score_range_or
+
+        def kernel(pdf):  # not a partial: applyInPandas warns on those
+            return fn(p, pdf)
+
+        cols = ["term_id", "first_doc_id", "last_doc_id", "doc_gaps", "tfs", "dls",
+                "block_max_score"]
+        local = self._driver_blocks(term_ids, cols, driving)
+        if local is not None:
+            parts = _per_range(local.to_pandas(), R, kernel)
+            return self._scored_local(pd.concat([_EMPTY_SCORES, *parts]), p.kk)
 
         blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(
-            "term_id", "first_doc_id", "last_doc_id", "doc_gaps", "tfs", "dls",
-            "block_max_score",
+            *cols,
             F.explode(
                 F.sequence(
                     F.floor(F.col("first_doc_id") / F.lit(R)),
@@ -938,174 +1105,12 @@ class Corpus:
                 )
             ).alias("rng"),
         )
-
-        empty_pdf = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-
-        def _decode_group(g, lo, hi, tid):
-            dd, tt, ll = [], [], []
-            for row in g.itertuples():  # loop over BLOCKS, not postings
-                d, t, l = codecs.decode_block({
-                    "first_doc_id": row.first_doc_id,
-                    "doc_gaps": row.doc_gaps,
-                    "tfs": row.tfs,
-                    "dls": row.dls,
-                })
-                dd.append(d)
-                tt.append(t)
-                ll.append(l)
-            d = np.concatenate(dd)
-            m = (d >= lo) & (d < hi)
-            d = d[m]
-            contrib = scoring.bm25(
-                np.concatenate(tt)[m], np.concatenate(ll)[m], avgdl, idf_map[tid]
-            )
-            return d, contrib
-
-        def _member(cands, d):
-            idx = np.searchsorted(cands, d)
-            memb = idx < cands.size
-            memb &= np.where(
-                memb, cands[np.minimum(idx, cands.size - 1)] == d, False
-            )
-            return memb
-
-        def _fold_topk(parts, key2_per_part):
-            """parts: [(d, contrib)]; key2_per_part: the (gid, t_ord) or
-            t_ord sort key arrays aligned with parts — exact LEFT fold per
-            doc in key order, then optional local top-k."""
-            d = np.concatenate([p[0] for p in parts])
-            c = np.concatenate([p[1] for p in parts])
-            keys = [np.concatenate(col) for col in zip(*key2_per_part)]
-            srt = np.lexsort(tuple(reversed(keys)) + (d,))
-            d, c = d[srt], c[srt]
-            ud, starts, counts = np.unique(d, return_index=True, return_counts=True)
-            score = np.zeros(ud.size, dtype=np.float64)
-            for j in range(int(counts.max())):
-                sel = counts > j
-                score[sel] += c[starts[sel] + j]
-            if kk is not None and ud.size > kk:
-                topk = np.lexsort((ud, -score))[:kk]
-                ud, score = ud[topk], score[topk]
-            return pd.DataFrame({"doc_id": ud.astype("int64"), "score": score})
-
-        def score_range_or(pdf: pd.DataFrame) -> pd.DataFrame:
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * R, (rng + 1) * R
-            by_term = {int(tid): g for tid, g in pdf.groupby("term_id")}
-            ub = {tid: float(g["block_max_score"].max()) for tid, g in by_term.items()}
-            sum_ub = sum(ub.values())
-            theta = -_math.inf
-            parts, keys = [], []
-            order = sorted(by_term, key=lambda tid: (df_map[tid], t_ord[tid]))
-            for tid in order:
-                g = by_term[tid]
-                if prune and theta > -_math.inf:
-                    slack = abs(theta) * 1e-12 + 1e-12  # fp-safety margin
-                    bound = g["block_max_score"].to_numpy() + (sum_ub - ub[tid])
-                    g = g[bound >= theta - slack]
-                if len(g) == 0:
-                    continue
-                d, contrib = _decode_group(g, lo, hi, tid)
-                if d.size == 0:
-                    continue
-                parts.append((d, contrib))
-                keys.append((np.full(d.size, t_ord[tid], dtype=np.int64),))
-                if prune:
-                    # θ update: k-th best accumulated partial. Order-free sums
-                    # are fine here — θ only gates pruning, never a reported
-                    # score (those are re-folded exactly below).
-                    ad = np.concatenate([p[0] for p in parts])
-                    ac = np.concatenate([p[1] for p in parts])
-                    udq, inv = np.unique(ad, return_inverse=True)
-                    if udq.size >= kk:
-                        sums = np.zeros(udq.size)
-                        np.add.at(sums, inv, ac)
-                        theta = float(np.partition(sums, udq.size - kk)[udq.size - kk])
-            if not parts:
-                return empty_pdf
-            return _fold_topk(parts, keys)
-
-        def score_range_and(pdf: pd.DataFrame) -> pd.DataFrame:
-            rng = int(pdf["rng"].iloc[0])
-            lo, hi = rng * R, (rng + 1) * R
-            by_term = {int(tid): g for tid, g in pdf.groupby("term_id")}
-            cands = None
-            decoded: dict[int, tuple] = {}
-            for gi in group_proc_order:
-                tids = [t for t in gid_terms[gi] if t in by_term]
-                gdocs = []
-                for tid in sorted(tids, key=lambda t: df_map[t]):
-                    if tid not in decoded:
-                        g = by_term[tid]
-                        if cands is not None:
-                            if cands.size == 0:
-                                return empty_pdf
-                            fi = g["first_doc_id"].to_numpy()
-                            la = g["last_doc_id"].to_numpy()
-                            li = np.searchsorted(cands, fi)
-                            keep = li < cands.size
-                            keep &= np.where(
-                                keep,
-                                cands[np.minimum(li, cands.size - 1)] <= la,
-                                False,
-                            )
-                            g = g[keep]
-                            if len(g) == 0:
-                                decoded[tid] = (
-                                    np.zeros(0, dtype=np.int64),
-                                    np.zeros(0, dtype=np.float64),
-                                )
-                                continue
-                        d, contrib = _decode_group(g, lo, hi, tid)
-                        if cands is not None and d.size:
-                            mb = _member(cands, d)
-                            d, contrib = d[mb], contrib[mb]
-                        decoded[tid] = (d, contrib)
-                    gdocs.append(decoded[tid][0])
-                gd = (
-                    np.unique(np.concatenate(gdocs))
-                    if gdocs else np.zeros(0, dtype=np.int64)
-                )
-                if gd.size == 0:
-                    return empty_pdf
-                cands = gd if cands is None else np.intersect1d(
-                    cands, gd, assume_unique=True
-                )
-                if cands.size == 0:
-                    return empty_pdf
-            # score: every (group, matched-term) pair over the surviving docs
-            parts, keys = [], []
-            for gi, tids in enumerate(gid_terms):
-                for tid in tids:
-                    d, contrib = decoded.get(
-                        tid, (np.zeros(0, dtype=np.int64), np.zeros(0))
-                    )
-                    if d.size == 0:
-                        continue
-                    mb = _member(cands, d)
-                    d, contrib = d[mb], contrib[mb]
-                    if d.size == 0:
-                        continue
-                    parts.append((d, contrib))
-                    keys.append((
-                        np.full(d.size, gi, dtype=np.int64),
-                        np.full(d.size, t_ord[tid], dtype=np.int64),
-                    ))
-            if not parts:
-                return empty_pdf
-            return _fold_topk(parts, keys)
-
-        fn = score_range_and if conjunctive else score_range_or
         # explicit range repartition: see positions_chain — stops AQE from
         # coalescing the tiny block shuffle into a near-serial Python stage
         scored = blocks.repartition(n_ranges, "rng").groupBy("rng").applyInPandas(
-            fn, schema="doc_id long, score double"
+            kernel, schema=_SCORES
         )
-        if kk is None:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
+        return scored if p.kk is None else _top_k(scored, p.kk)
 
     def score_and(self, terms: list[str], k: int | None = None) -> DataFrame:
         """Conjunctive BooleanQuery (all MUST clauses): only docs containing
@@ -1124,10 +1129,9 @@ class Corpus:
         uniq = sorted(set(terms))
         tinfo = self.lookup_terms(uniq)
         if len(tinfo) < len(uniq):  # a missing term empties the conjunction
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, _SCORES)
         if len(tinfo) == 1:
-            decoded = self._decoded_scores(tinfo, k_hint=k)
-            return decoded.select("doc_id", F.col("contrib").alias("score"))
+            return self._decoded_scores(tinfo, k_hint=k)
         return self._range_scores(tinfo, k, conjunctive=True)
 
     def score_and_groups(
@@ -1147,15 +1151,14 @@ class Corpus:
     def _score_and_groups(
         self, groups: list[list[str]], k: int | None = None
     ) -> DataFrame:
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not groups:
-            return empty
+            return local_frame(self.spark, _SCORES)
         flat = sorted({t for g in groups for t in g})
         tinfo = self.lookup_terms(flat)
         present = set(tinfo["term"])
         resolved = [sorted(set(g) & present) for g in groups]
         if any(not g for g in resolved):  # an empty clause empties the AND
-            return empty
+            return local_frame(self.spark, _SCORES)
         if all(len(g) == 1 for g in resolved):
             seen = {g[0] for g in resolved}
             if len(seen) == len(resolved):  # plain term conjunction
@@ -1166,11 +1169,7 @@ class Corpus:
         )
 
     def search_and(self, terms: list[str], k: int = 10) -> DataFrame:
-        return (
-            self.score_and(terms, k=k)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top_k(self.score_and(terms, k=k), k)
 
     def score_phrase(self, terms: list[str]) -> DataFrame:
         """Exact adjacent phrase (SpansSequence analog, /root/reference/engine/
@@ -1187,13 +1186,9 @@ class Corpus:
         )
 
     def _score_phrase(self, terms: list[str]) -> DataFrame:
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not terms:
-            return empty
         tinfo = self.lookup_terms(terms)
-        present = set(tinfo["term"])
-        if any(t not in present for t in terms):
-            return empty
+        if not terms or not set(terms) <= set(tinfo["term"]):
+            return local_frame(self.spark, _SCORES)
         info_by_term = {r.term: r for r in tinfo.itertuples()}
         idf_sum = np.float64(0.0)
         for t in terms:  # phrase idf: duplicates kept, phrase order
@@ -1208,6 +1203,14 @@ class Corpus:
         chain = self.positions_chain(
             [([t], i) for i, t in enumerate(terms)], with_dl=True
         )
+        if chain.isLocal():  # driver path: the same BM25 in numpy, no job
+            rows = chain.collect()
+            tf = [len(r["positions"]) for r in rows]
+            score = scoring.bm25(tf, [r["dl"] for r in rows], avgdl, idf_sum)
+            return self._scored_local(pd.DataFrame({
+                "doc_id": np.array([r["doc_id"] for r in rows], dtype="int64"),
+                "score": score,
+            }))
         ptf = chain.select("doc_id", "dl", F.size("positions").alias("tf"))
         # closed-form BM25 expression, op-ordered to match scoring.bm25 bitwise
         norm = F.lit(scoring.K1) * (
@@ -1221,11 +1224,7 @@ class Corpus:
         return ptf.select("doc_id", score.alias("score"))
 
     def search_phrase(self, terms: list[str], k: int = 10) -> DataFrame:
-        return (
-            self.score_phrase(terms)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top_k(self.score_phrase(terms), k)
 
     def enable_search_cache(self, max_entries: int = 64) -> "Corpus":
         """Turn on the plan-keyed result cache (the SearchCache analog,
@@ -1374,9 +1373,5 @@ class Corpus:
         for t in q.terms:
             clauses.append(self.expand_pattern(t.pattern) if t.regex else [t.pattern])
         if isinstance(q, AndQuery):
-            return (
-                self.score_and_groups(clauses, k=k)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
+            return _top_k(self.score_and_groups(clauses, k=k), k)
         return self.search_or([t for c in clauses for t in c], k=k)

@@ -180,10 +180,12 @@ def recover_pending(path: str) -> bool:
             info = json.load(f)
     except Exception:
         # Unreadable marker. The link-based acquisition never exposes a
-        # content-less marker, so this means filesystem damage (or a foreign
-        # writer using a different scheme). Treat it as HELD unless it has
-        # aged past a grace period — deleting a marker we cannot attribute
-        # to a dead writer risks unlocking a live append.
+        # content-less marker, but the O_EXCL fallback (filesystems without
+        # hard links) leaves one empty until its write lands — for good if
+        # the writer dies in between. Otherwise this means filesystem damage
+        # (or a foreign writer using a different scheme). Treat it as HELD
+        # unless it has aged past a grace period — deleting a marker we
+        # cannot attribute to a dead writer risks unlocking a live append.
         try:
             age = time.time() - os.path.getmtime(marker)
         except OSError:

@@ -436,8 +436,10 @@ def fixed_span(docs: DataFrame, start: int, end: int) -> DataFrame:
 
 
 def no_hits(spark) -> DataFrame:
-    """The empty span set (SpanQueryNoHits)."""
-    return spark.createDataFrame([], "doc_id long, start int, end int")
+    """The empty span set (SpanQueryNoHits), as a LocalRelation."""
+    from blacklab_spark.corpus import local_frame
+
+    return local_frame(spark, "doc_id long, start int, end int")
 
 
 def filter_by_docs(spans: DataFrame, docs: DataFrame, predicate) -> DataFrame:

@@ -1543,7 +1543,9 @@ class PlanCache:
             self.misses += 1
         from pyspark import StorageLevel
 
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
+        df = build()
+        if not df.isLocal():  # a driver-path LocalRelation needs no cache job
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
         evicted = []
         with self._lock:
             prev = self._od.pop(key, None)

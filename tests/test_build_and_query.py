@@ -100,6 +100,26 @@ def test_postings_decode_match_oracle(small):
     assert set(by_term) == set(oi.postings)
 
 
+def test_stale_n_docs_keeps_every_posting(small):
+    """Salt invariant: a hot term's posting with doc_id ≥ n_docs (here a
+    stale n_docs of half the corpus) lands in the last salt instead of
+    vanishing in the (term, salt) join with the salted term dict."""
+    from pyspark.sql import functions as F
+    from blacklab_spark.build import (
+        _TFPOS_SCHEMA, _term_counts_batches, build_postings_frame,
+    )
+    c, oi, _ = small
+    tfpos = c.docs.select("doc_id", "dl", "tokens").mapInArrow(
+        _term_counts_batches, schema=_TFPOS_SCHEMA
+    )
+    frame = build_postings_frame(
+        tfpos, c.term_dict, num_partitions=4, salt_df_threshold=50,
+        docs_per_salt=256, block_size=64, n_docs=c.n_docs // 2, avgdl=c.avgdl,
+    )
+    total = frame.agg(F.sum("num_docs")).collect()[0][0]
+    assert total == sum(len(p) for p in oi.postings.values())
+
+
 # ------------------------------------------------------------ bm25 parity --
 
 FIXTURE_QUERIES = [
