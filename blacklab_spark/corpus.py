@@ -26,7 +26,9 @@ with DataFrame plans:
                         block_size: summed df of a term/OR/regex/spans leaf,
                         of the rarest clause of an AND/phrase/chain) and the
                         row groups to read fit in one task's split
-                        (≤ spark.sql.files.maxPartitionBytes, from the footers)
+                        (≤ spark.sql.files.maxPartitionBytes, from the footers);
+                        an ungrouped hits_page over driver-path hits computes
+                        its counts, window and KWIC (docs read the same way)
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -57,6 +59,8 @@ from blacklab_spark.build import IndexPaths
 from blacklab_spark.plans.parser import AndQuery, OrQuery, PhraseQuery, parse_query
 
 _SCORES = "doc_id long, score double"
+_KEYS = {"postings": "term_id", "docs": "doc_id"}  # the driver path's read keys
+_SPANS = "doc_id long, start int, end int"
 _DECODED_POS_SCHEMA = (
     "term_id long, doc_id long, tf int, dl int, positions array<long>"
 )
@@ -523,7 +527,9 @@ class Corpus:
         from pyspark import StorageLevel
 
         self.lookup_terms([])  # populate the driver-side term-dict cache
-        self._postings_footers()  # and the driver path's file snapshot
+        # and the driver path's file snapshots (a persisted docs relation
+        # lists no input files, so before the pin below)
+        self._footers("postings"), self._footers("docs")
         # Page-cache warm must READ the data pages: a bare count() is served
         # from parquet row-group metadata with an empty read schema and never
         # touches the postings bytes. Summing the binary column lengths
@@ -664,35 +670,42 @@ class Corpus:
         parallelism Spark would use."""
         if driving_df > self.meta["block_size"]:
             return None
-        dataset, lo, hi, nbytes = self._postings_footers()
+        return self._driver_read("postings", tids, cols)
+
+    def _driver_read(self, table: str, keys, cols: list[str]) -> pa.Table | None:
+        """The rows of `table` ("postings" or "docs") whose key (term_id,
+        doc_id) is in `keys`, read through pyarrow; None when the row groups
+        holding them exceed one Spark task's split."""
+        dataset, lo, hi, nbytes = self._footers(table)
         if dataset is None:
             return None
-        t = np.unique(np.asarray(tids, dtype=np.int64))
+        t = np.unique(np.asarray(keys, dtype=np.int64))
         hit = np.searchsorted(t, lo) < np.searchsorted(t, hi, side="right")
         conf = self.spark._jsparkSession.sessionState().conf()
         if int(nbytes[hit].sum()) > conf.filesMaxPartitionBytes():
             return None
         import pyarrow.dataset as ds
 
-        return dataset.to_table(columns=cols, filter=ds.field("term_id").isin(t))
+        return dataset.to_table(columns=cols, filter=ds.field(_KEYS[table]).isin(t))
 
-    def _postings_footers(self) -> tuple:
-        """(pyarrow dataset, then per row group: term_id min, max, compressed
-        bytes) over the files self.postings resolved — read once per Corpus
-        from the parquet footers, so both paths read the same snapshot.
-        Dataset None (Spark path only) off the local filesystem."""
-        cached = getattr(self, "_footers", None)
+    def _footers(self, table: str) -> tuple:
+        """(pyarrow dataset, then per row group: key min, max, compressed
+        bytes) over the files getattr(self, table) resolved — read once per
+        Corpus from the parquet footers, so both paths read the same
+        snapshot. Dataset None (Spark path only) off the local filesystem."""
+        cache = self.__dict__.setdefault("_footer_cache", {})
+        cached = cache.get(table)
         if cached is None:
             import pyarrow.dataset as ds
             import pyarrow.parquet as pq
 
-            urls = [urlparse(u) for u in self.postings.inputFiles()]
+            urls = [urlparse(u) for u in getattr(self, table).inputFiles()]
             cached = (None, None, None, None)
             if urls and all(u.scheme in ("", "file") for u in urls):
                 groups = []
                 for u in urls:
                     md = pq.read_metadata(u.path)
-                    col = md.schema.names.index("term_id")
+                    col = md.schema.names.index(_KEYS[table])
                     for rg in map(md.row_group, range(md.num_row_groups)):
                         st = rg.column(col).statistics
                         ok = st is not None and st.has_min_max
@@ -704,7 +717,7 @@ class Corpus:
                 lo, hi, nbytes = np.array(groups, dtype=np.int64).reshape(-1, 3).T
                 dataset = ds.dataset([u.path for u in urls], format="parquet")
                 cached = (dataset, lo, hi, nbytes)
-            self._footers = cached
+            cache[table] = cached
         return cached
 
     def _scored_local(self, scores: pd.DataFrame, k: int | None = None) -> DataFrame:
@@ -780,7 +793,7 @@ class Corpus:
         size a Python-decoded side; we can)."""
         tinfo = self.lookup_terms(terms)
         if tinfo.empty:
-            return local_frame(self.spark, "doc_id long, start int, end int")
+            return local_frame(self.spark, _SPANS)
         out = (
             self._decoded_positions(tinfo)
             .select("doc_id", F.explode("positions").alias("p"))
@@ -846,7 +859,7 @@ class Corpus:
         (doc_id, start, end): the `run []{m,n} clause` shape without ever
         materializing the prefix outside the partition."""
         if vargap_tail is not None:
-            out_schema = "doc_id long, start int, end int"
+            out_schema = _SPANS
         else:
             out_schema = (
                 "doc_id long, positions array<long>"
@@ -1319,8 +1332,13 @@ class Corpus:
         Both cap probes compile to CollectLimit — a runaway query costs
         O(cap), not O(hits)."""
         from blacklab_spark.operators import grouping as G
+        from blacklab_spark.operators.spans import SPAN_COLS
 
         hits_df = self.find_cql(query)
+        if (sort, group_by) == (None, None) and hits_df.isLocal() and hits_df.columns == SPAN_COLS:
+            return self._local_hits_page(
+                hits_df, first, number, context, max_process, max_count
+            )
         processed = (
             G.process_window(hits_df, max_process)
             if max_process is not None else hits_df
@@ -1358,6 +1376,48 @@ class Corpus:
             # is re-ordered — the join itself does not preserve sort order
             page = G.kwic_spans(page, self.docs, context).orderBy(*order)
         return HitsPage(hits=page, groups=groups, summary=summary)
+
+    def _local_hits_page(
+        self, hits_df, first, number, context, max_process, max_count
+    ) -> "HitsPage":
+        """hits_page over driver-path hits: the same window, KWIC and summary
+        computed in the driver, each a LocalRelation (no Spark job).
+        KWIC reads the page's docs through pyarrow; when those row groups
+        exceed one task's split it joins the docs table on Spark instead."""
+        from blacklab_spark.operators import grouping as G
+        from blacklab_spark.operators.spans import SPAN_COLS
+
+        hits = pd.DataFrame(hits_df.collect(), columns=SPAN_COLS, dtype="int64")
+        n = len(hits)
+        processed = hits.iloc[:max_process]
+
+        def cap(c):
+            return (n, 0) if c is None else (min(n, c), int(n > c))
+
+        summary = local_frame(
+            self.spark, "n_processed long, processed_is_estimate int, "
+            "n_counted long, count_is_lower_bound int",
+            pd.DataFrame([cap(max_process) + cap(max_count)], columns=[
+                "n_processed", "processed_is_estimate", "n_counted",
+                "count_is_lower_bound"]),
+        )
+        page = processed.sort_values(SPAN_COLS, kind="stable")
+        page = page.iloc[first:first + number].reset_index(drop=True)
+        if context is None:
+            return HitsPage(local_frame(self.spark, _SPANS, page), None, summary)
+        docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
+        if docs is None:
+            kwic = G.kwic_spans(local_frame(self.spark, _SPANS, page), self.docs, context)
+            return HitsPage(kwic.orderBy(*SPAN_COLS), None, summary)
+        toks = dict(zip(docs["doc_id"].to_pylist(), docs["tokens"].to_pylist()))
+        rows = [(toks[d], s, e) for d, s, e in page.itertuples(index=False)]
+        page["left"] = [" ".join(t[max(0, s - context):s]) for t, s, _ in rows]
+        page["match"] = [" ".join(t[s:e]) for t, s, e in rows]
+        page["right"] = [" ".join(t[e:e + context]) for t, _, e in rows]
+        return HitsPage(
+            local_frame(self.spark, _SPANS + ", left string, match string, right string", page),
+            None, summary,
+        )
 
     def search(self, query: str, k: int = 10) -> DataFrame:
         """Parse a query string (mini-BCQL: terms / quoted phrase / /regex/)

@@ -26,6 +26,8 @@ per-document merge-join of sorted spans):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -262,7 +264,18 @@ def seq_positions_extend(pa: DataFrame, pb: DataFrame, offset: int) -> DataFrame
 
 
 def spans_from_positions(pdf: DataFrame, width: int) -> DataFrame:
-    """(doc_id, positions) → fixed-width spans (doc_id, start, end)."""
+    """(doc_id, positions) → fixed-width spans (doc_id, start, end). Driver-
+    path positions (a plan that optimizes to a LocalRelation) are exploded
+    in the driver, so the spans are a LocalRelation too (no Spark job)."""
+    plan = pdf._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        from blacklab_spark.corpus import local_frame
+
+        pairs = [(r["doc_id"], p) for r in pdf.collect() for p in r["positions"]]
+        d, s = np.array(pairs, np.int64).reshape(-1, 2).T
+        return local_frame(pdf.sparkSession, "doc_id long, start int, end int", pd.DataFrame(
+            {"doc_id": d, "start": s.astype("int32"), "end": (s + width).astype("int32")}
+        ))
     return pdf.select("doc_id", F.explode("positions").alias("s")).select(
         "doc_id",
         F.col("s").cast("int").alias("start"),

@@ -187,27 +187,29 @@ def test_seq_array_domain_plan(cidx, cidx_bs1):
     assert spans(cidx.find_cql('"mier"{2,2} "mier"')) == [(1, 3, 6)]
 
 
-def test_search_cache_plan_keyed(cidx):
+def test_search_cache_plan_keyed(cidx_bs1):
     # SearchCache analog: repeated queries return the SAME persisted frame;
-    # syntactic variants that rewrite to one plan share the entry
-    cidx.enable_search_cache()
-    cache = cidx._search_cache
-    r1 = spans(cidx.find_cql('"the" "quick"'))
+    # syntactic variants that rewrite to one plan share the entry. On
+    # cidx_bs1 every chain is above the driver path's bound: a driver-path
+    # LocalRelation is cached but never persisted
+    cidx_bs1.enable_search_cache()
+    cache = cidx_bs1._search_cache
+    r1 = spans(cidx_bs1.find_cql('"the" "quick"'))
     assert (cache.hits, cache.misses) == (0, 1)
-    df2 = cidx.find_cql('"the" "quick"')
+    df2 = cidx_bs1.find_cql('"the" "quick"')
     assert cache.hits == 1 and df2.is_cached
     assert spans(df2) == r1
     # ("the")("quick") rewrites to the same SeqNode → cache hit
-    cidx.find_cql('("the") ("quick")')
+    cidx_bs1.find_cql('("the") ("quick")')
     assert (cache.hits, cache.misses) == (2, 1)
     # different plan → miss
-    cidx.find_cql('"the" [] "fox"')
+    cidx_bs1.find_cql('"the" [] "fox"')
     assert cache.misses == 2
     # LRU eviction unpersists
     cache.max_entries = 1
-    cidx.find_cql('"may" "the"')
+    cidx_bs1.find_cql('"may" "the"')
     assert len(cache._od) == 1
-    del cidx._search_cache
+    del cidx_bs1._search_cache
 
 
 def test_cql_unquote_preserves_regex_escapes():

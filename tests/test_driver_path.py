@@ -30,7 +30,7 @@ def pair(spark, tmp_root):
     remote = Corpus(spark, f"{tmp_root}/dp_bs4")
     for c in (local, remote):  # one-time loads are jobs of their own:
         c.lookup_terms([])  # the term dict
-        c.postings  # parquet schema inference of the postings relation
+        c.postings, c.docs  # parquet schema inference of both relations
     return local, remote, oi, texts
 
 
@@ -115,7 +115,7 @@ def test_scored_both_paths_match_oracle(spark, pair, picks, kind):
     assert jobs_remote > 0  # driving df > block_size: the Spark path
 
 
-def test_cql_and_page_both_paths_match_oracle(pair, picks):
+def test_cql_and_page_both_paths_match_oracle(spark, pair, picks):
     local, remote, oi, texts = pair
     rare, _, _, (a, b), _ = picks
     t = rare[0]
@@ -135,17 +135,46 @@ def test_cql_and_page_both_paths_match_oracle(pair, picks):
          " ".join(toks[d][e:e + 2]))
         for d, s, e in term_spans[:5]
     ]
-    for c in (local, remote):
-        assert spans(c.find_cql(f'"{t}"')) == term_spans
-        assert spans(c.find_cql(f'"{a}" "{b}"')) == phrase_spans
+    n = len(term_spans)
+
+    def request(c):
         page = c.hits_page(f'"{t}"', context=2, number=5)
-        got = [
-            (r["doc_id"], r["start"], r["end"], r["left"], r["match"], r["right"])
-            for r in page.hits.collect()
-        ]
-        assert got == kwic
-        n = len(term_spans)
-        assert tuple(page.summary.collect()[0]) == (n, 0, n, 0)
+        return (
+            spans(c.find_cql(f'"{t}"')),
+            spans(c.find_cql(f'"{a}" "{b}"')),
+            [(r["doc_id"], r["start"], r["end"], r["left"], r["match"], r["right"])
+             for r in page.hits.collect()],
+            tuple(page.summary.collect()[0]),
+        )
+
+    for c in (local, remote):
+        got, jobs = run(spark, lambda: request(c))
+        assert got == (term_spans, phrase_spans, kwic, (n, 0, n, 0))
+        assert (jobs == 0) == (c is local)
+
+
+def test_page_window_and_caps_both_paths(spark, pair, picks):
+    """first and both caps over driver-path hits give the Spark path's
+    rows, with no job. A capped window is the first hits in scan order,
+    which differs between the paths; only its size is compared."""
+    local, remote, _, _ = pair
+    t = picks[0][0]
+
+    def request(c):
+        page = c.hits_page(f'"{t}"', first=1, number=2)
+        capped = c.hits_page(f'"{t}"', max_process=3, max_count=2)
+        return (
+            [tuple(r) for r in page.hits.collect()],
+            tuple(page.summary.collect()[0]),
+            len(capped.hits.collect()),
+            tuple(capped.summary.collect()[0]),
+        )
+
+    got_local, jobs_local = run(spark, lambda: request(local))
+    got_remote, jobs_remote = run(spark, lambda: request(remote))
+    assert got_local == got_remote
+    assert len(got_local[0]) == 2 and got_local[2:] == (3, (3, 1, 2, 1))
+    assert jobs_local == 0 and jobs_remote > 0
 
 
 def test_tiny_split_sends_rare_term_to_spark(spark, pair, picks):
@@ -154,7 +183,7 @@ def test_tiny_split_sends_rare_term_to_spark(spark, pair, picks):
     local, _, oi, _ = pair
     t = picks[0][0]
     tid = int(local.lookup_terms([t])["term_id"].iloc[0])
-    _, lo, hi, nbytes = local._postings_footers()
+    _, lo, hi, nbytes = local._footers("postings")
     need = int(nbytes[(lo <= tid) & (tid <= hi)].sum())
     expect = orc.topk_or(oi, [t], 10)
     key = "spark.sql.files.maxPartitionBytes"
@@ -209,6 +238,7 @@ def test_vocabulary_miss_runs_no_job(spark, pair):
             lambda: c.search_or(["zzzabsent"], 10).collect(),
             lambda: c.search_phrase(["the", "zzzabsent"], 10).collect(),
             lambda: c.find_cql('"zzzabsent"').collect(),
+            lambda: c.hits_page('"zzzabsent"', context=2).hits.collect(),
         ):
             got, jobs = run(spark, action)
             assert (got, jobs) == ([], 0)
