@@ -22,13 +22,14 @@ with DataFrame plans:
   * driver path       → the same block kernels run in the driver over a
                         pyarrow read and return a sorted LocalRelation (no
                         Spark job for top-k or empty results), chosen at plan
-                        time when the driving df fits in one block (≤ meta
-                        block_size: summed df of a term/OR/regex/spans leaf,
-                        of the rarest clause of an AND/phrase/chain) and the
-                        row groups to read fit in one task's split
+                        time when the postings a query reads (summed df of
+                        every term whose blocks it reads, for every shape)
+                        are ≤ _DRIVER_MAX_POSTINGS and the row groups to
+                        read fit in one task's split
                         (≤ spark.sql.files.maxPartitionBytes, from the footers);
-                        an ungrouped hits_page over driver-path hits computes
-                        its counts, window and KWIC (docs read the same way)
+                        a hits_page over driver-path hits, ungrouped or grouped
+                        by a span column, computes its counts, groups, window
+                        and KWIC (docs read the same way)
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -61,6 +62,7 @@ from blacklab_spark.plans.parser import AndQuery, OrQuery, PhraseQuery, parse_qu
 _SCORES = "doc_id long, score double"
 _KEYS = {"postings": "term_id", "docs": "doc_id"}  # the driver path's read keys
 _SPANS = "doc_id long, start int, end int"
+_SPAN_TYPES = dict(c.split() for c in _SPANS.split(", "))
 _DECODED_POS_SCHEMA = (
     "term_id long, doc_id long, tf int, dl int, positions array<long>"
 )
@@ -661,14 +663,24 @@ class Corpus:
         return sorted(r["term"] for r in rows)
 
     # --------------------------------------------------------- driver path --
-    def _driver_blocks(self, tids, cols: list[str], driving_df: int) -> pa.Table | None:
+    # The most postings a query may read and still run in the driver: the
+    # 4-client crossover of BENCH/DRIVER_PATH_CROSSOVER.md's per-kind table.
+    # With 1 client the driver wins up to ~500k postings; with 4 clients
+    # sharing the driver's GIL, phrase and chain requests break even at
+    # ~65-115k and lose above, while every kind at ≤ 64k is 1.3-8x faster
+    # in the driver.
+    _DRIVER_MAX_POSTINGS = 1 << 16
+
+    def _driver_blocks(self, tids, cols: list[str], df: int) -> pa.Table | None:
         """The driver path's read: the blocks of `tids` through pyarrow, or
         None when the query belongs on Spark. The driver takes a query only
-        when its driving postings (plan-time df) fit in one block AND the
-        row groups it must read fit in one Spark task's split
+        when `df`, the summed plan-time df of every term whose blocks the
+        query reads, is ≤ _DRIVER_MAX_POSTINGS (an upper bound on the work:
+        AND and chain kernels skip blocks but never read more) AND the row
+        groups it must read fit in one Spark task's split
         (spark.sql.files.maxPartitionBytes), so it never gives up scan
         parallelism Spark would use."""
-        if driving_df > self.meta["block_size"]:
+        if df > self._DRIVER_MAX_POSTINGS:
             return None
         return self._driver_read("postings", tids, cols)
 
@@ -882,6 +894,7 @@ class Corpus:
 
         infos = []
         tids_by_layer: dict[int, set[int]] = {}
+        dfs: dict[tuple[int, int], int] = {}  # (layer, term_id) -> df
         for cl in clauses:
             terms, off = cl[0], cl[1]
             lyr = _layer_idx(cl[2] if len(cl) > 2 else None)
@@ -891,6 +904,7 @@ class Corpus:
                 return local_frame(self.spark, out_schema)
             infos.append((int(ti["df"].sum()), lyr, tids, int(off)))
             tids_by_layer.setdefault(lyr, set()).update(tids)
+            dfs.update(((lyr, t), int(d)) for t, d in zip(tids, ti["df"]))
         infos.sort(key=lambda t: (t[0], t[3]))
         tail_tids: list[int] = []
         tail_lyr = 0
@@ -904,6 +918,7 @@ class Corpus:
             tail_tids = [int(t) for t in tti["term_id"]]
             if not tail_tids:
                 return local_frame(self.spark, out_schema)
+            dfs.update(((tail_lyr, t), int(d)) for t, d in zip(tail_tids, tti["df"]))
             shifts = [t_width + g for g in range(t_gmin, t_gmax + 1)]
         n_ranges = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         R = max(1, -(-self.n_docs // n_ranges))
@@ -942,9 +957,9 @@ class Corpus:
             reads.append((1, tail_lyr, tail_tids))
         cols = ["term_id", "first_doc_id", "last_doc_id", "doc_gaps", "tfs", "dls",
                 "positions"]
-        # the driving df is the rarest clause's (infos is df-sorted)
+        read_df = sum(dfs[lyr, t] for _, lyr, tids in reads for t in tids)
         local = [
-            layers[lyr]._driver_blocks(tids, cols, infos[0][0])
+            layers[lyr]._driver_blocks(tids, cols, read_df)
             for _, lyr, tids in reads
         ]
         if all(t is not None for t in local):
@@ -1082,8 +1097,6 @@ class Corpus:
                 and not self.meta.get("bounds_stale", False)
             ),
         )
-        # the driving df: all terms for OR, the rarest group for AND
-        driving = sum(df_map.values())
         if conjunctive:
             if groups is None:
                 groups = [[t] for t in sorted(tinfo["term"])]
@@ -1094,7 +1107,6 @@ class Corpus:
             # rarest group first builds the candidate set fastest
             g_df = [sum(df_map[t] for t in g) for g in p.gid_terms]
             p.group_proc_order = sorted(range(len(g_df)), key=g_df.__getitem__)
-            driving = min(g_df)
         n_ranges = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         p.R = R = max(1, -(-self.n_docs // n_ranges))
         fn = score_range_and if conjunctive else score_range_or
@@ -1104,7 +1116,7 @@ class Corpus:
 
         cols = ["term_id", "first_doc_id", "last_doc_id", "doc_gaps", "tfs", "dls",
                 "block_max_score"]
-        local = self._driver_blocks(term_ids, cols, driving)
+        local = self._driver_blocks(term_ids, cols, sum(df_map.values()))
         if local is not None:
             parts = _per_range(local.to_pandas(), R, kernel)
             return self._scored_local(pd.concat([_EMPTY_SCORES, *parts]), p.kk)
@@ -1335,9 +1347,12 @@ class Corpus:
         from blacklab_spark.operators.spans import SPAN_COLS
 
         hits_df = self.find_cql(query)
-        if (sort, group_by) == (None, None) and hits_df.isLocal() and hits_df.columns == SPAN_COLS:
+        if (
+            sort is None and group_by in (None, *SPAN_COLS)
+            and hits_df.isLocal() and hits_df.columns == SPAN_COLS
+        ):
             return self._local_hits_page(
-                hits_df, first, number, context, max_process, max_count
+                hits_df, group_by, first, number, context, max_process, max_count
             )
         processed = (
             G.process_window(hits_df, max_process)
@@ -1378,12 +1393,13 @@ class Corpus:
         return HitsPage(hits=page, groups=groups, summary=summary)
 
     def _local_hits_page(
-        self, hits_df, first, number, context, max_process, max_count
+        self, hits_df, group_by, first, number, context, max_process, max_count
     ) -> "HitsPage":
-        """hits_page over driver-path hits: the same window, KWIC and summary
-        computed in the driver, each a LocalRelation (no Spark job).
-        KWIC reads the page's docs through pyarrow; when those row groups
-        exceed one task's split it joins the docs table on Spark instead."""
+        """hits_page over driver-path hits: the same window, groups (by a
+        span column), KWIC and summary computed in the driver, each a
+        LocalRelation (no Spark job). KWIC reads the page's docs through
+        pyarrow; when those row groups exceed one task's split it joins the
+        docs table on Spark instead."""
         from blacklab_spark.operators import grouping as G
         from blacklab_spark.operators.spans import SPAN_COLS
 
@@ -1401,14 +1417,20 @@ class Corpus:
                 "n_processed", "processed_is_estimate", "n_counted",
                 "count_is_lower_bound"]),
         )
+        groups = None
+        if group_by is not None:  # the Spark path's groupBy(...).agg(count)
+            groups = local_frame(
+                self.spark, f"{group_by} {_SPAN_TYPES[group_by]}, n_hits long",
+                processed.groupby(group_by).size().reset_index(name="n_hits"),
+            )
         page = processed.sort_values(SPAN_COLS, kind="stable")
         page = page.iloc[first:first + number].reset_index(drop=True)
         if context is None:
-            return HitsPage(local_frame(self.spark, _SPANS, page), None, summary)
+            return HitsPage(local_frame(self.spark, _SPANS, page), groups, summary)
         docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
         if docs is None:
             kwic = G.kwic_spans(local_frame(self.spark, _SPANS, page), self.docs, context)
-            return HitsPage(kwic.orderBy(*SPAN_COLS), None, summary)
+            return HitsPage(kwic.orderBy(*SPAN_COLS), groups, summary)
         toks = dict(zip(docs["doc_id"].to_pylist(), docs["tokens"].to_pylist()))
         rows = [(toks[d], s, e) for d, s, e in page.itertuples(index=False)]
         page["left"] = [" ".join(t[max(0, s - context):s]) for t, s, _ in rows]
@@ -1416,7 +1438,7 @@ class Corpus:
         page["right"] = [" ".join(t[e:e + context]) for t, _, e in rows]
         return HitsPage(
             local_frame(self.spark, _SPANS + ", left string, match string, right string", page),
-            None, summary,
+            groups, summary,
         )
 
     def search(self, query: str, k: int = 10) -> DataFrame:

@@ -7,6 +7,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The driver heap get_spark asks for when none is given: half the
+    host's physical memory, capped at 64g. A larger heap than the host has
+    lets the JVM grow until the OOM killer ends it."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):  # no sysconf: the cap
+        return "64g"
+    return f"{max(1, min(64 << 10, phys // 2 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "blacklab_spark",
     cores: int | None = None,
@@ -18,7 +29,8 @@ def get_spark(
     cores=None → local[*] (or $SPARK_GRAFT_CPUS if set). We keep
     shuffle.partitions ≈ cores for local runs (the 200 default over-
     parallelizes tiny data and under-parallelizes huge data); on a real
-    cluster AQE coalescing re-plans at runtime anyway.
+    cluster AQE coalescing re-plans at runtime anyway. The driver heap is
+    driver_memory, else $SPARK_GRAFT_DRIVER_MEM, else _default_driver_memory().
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -38,7 +50,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )

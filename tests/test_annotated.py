@@ -146,6 +146,10 @@ def test_cross_layer_chain_kernel_matches_join(acorp, monkeypatch):
         '[pos="noun"] [pos="noun"]',
     ]
     kernel = {q: spans(acorp.find_cql(q)) for q in queries}
+    on_spark = AnnotatedCorpus(acorp.spark, acorp.root)
+    for layer in on_spark.layers.values():
+        layer._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
+    assert kernel == {q: spans(on_spark.find_cql(q)) for q in queries}
     monkeypatch.setenv("BLACKLAB_SEQ_KERNEL", "join")
     join = {q: spans(acorp.find_cql(q)) for q in queries}
     monkeypatch.delenv("BLACKLAB_SEQ_KERNEL")

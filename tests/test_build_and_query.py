@@ -44,6 +44,14 @@ def rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
+def spark_path(c):
+    """c's index opened with the driver path's postings bound at -1: every
+    postings kernel runs on Spark."""
+    out = Corpus(c.spark, c.paths.root)
+    out._DRIVER_MAX_POSTINGS = -1
+    return out
+
+
 # ------------------------------------------------------------ structure ----
 
 def test_stats_match(small):
@@ -210,9 +218,10 @@ def test_small_corpus_or_and_phrase(small):
 
 def test_spans_term_postings_backed(small):
     """Corpus.spans_term decodes spans from the positional postings: the plan
-    must read the postings table and must NOT scan the docs table."""
+    must read the postings table and must NOT scan the docs table. On the
+    driver path the same spans come back as a LocalRelation."""
     c, oi, _ = small
-    sp = c.spans_term("the")
+    sp = spark_path(c).spans_term("the")
     plan = sp._jdf.queryExecution().toString()
     assert "postings" in plan
     assert "/docs" not in plan
@@ -221,6 +230,8 @@ def test_spans_term_postings_backed(small):
         (d, p, p + 1) for d, ps in oi.positions["the"].items() for p in ps
     )
     assert got == exp
+    local = c.spans_term("the")
+    assert sorted((r["doc_id"], r["start"], r["end"]) for r in local.collect()) == exp
 
 
 def test_hits_window_take_ordered_plan(small):
@@ -250,12 +261,11 @@ def test_range_scorer_invariant_to_partitioning(small):
     base_and = rows(c.search_and(q_and, k=12))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        assert rows(c.search_or(q_or, k=12)) == base_or
-        assert rows(c.search_and(q_and, k=12)) == base_and
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
-        assert rows(c.search_or(q_or, k=12)) == base_or
-        assert rows(c.search_and(q_and, k=12)) == base_and
+        for n in ("3", "97"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            for corpus in (c, spark_path(c)):
+                assert rows(corpus.search_or(q_or, k=12)) == base_or
+                assert rows(corpus.search_and(q_and, k=12)) == base_and
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert base_or == orc.topk_or(oi, q_or, 12)

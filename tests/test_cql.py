@@ -145,24 +145,24 @@ def test_unbounded_edge_gaps(runs_idx):
 
 
 @pytest.fixture(scope="module")
-def cidx_bs1(spark, tmp_root):
-    """The fixture corpus with one posting per block: a clause of df ≥ 2 is
-    above the driver path's bound, so chains run on Spark."""
-    path = f"{tmp_root}/cql_idx_bs1"
-    build_index(spark, spark.createDataFrame(fixture_corpus()), path, block_size=1)
-    return Corpus(spark, path)
+def cidx_spark(spark, cidx):
+    """cidx's index opened with the driver path's postings bound at -1:
+    every query runs on Spark."""
+    c = Corpus(spark, cidx.paths.root)
+    c._DRIVER_MAX_POSTINGS = -1
+    return c
 
 
-def test_seq_array_domain_plan(cidx, cidx_bs1):
+def test_seq_array_domain_plan(cidx, cidx_spark):
     # r4: a single-layer clause run compiles to the doc-range CHAIN KERNEL —
     # one groupBy(rng).applyInPandas over compressed blocks, NO join at all
     # in the chain (VERDICT r2 #5 → r4 kernel)
-    df = cidx_bs1.find_cql('"the" "quick"')
+    df = cidx_spark.find_cql('"the" "quick"')
     assert spans(df) == [(0, 0, 2), (5, 0, 2)]
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     # regex clause in the chain: qu.* expands to quick/question → kernel path too
-    df2 = cidx_bs1.find_cql('[word="qu.*"] "brown"')
+    df2 = cidx_spark.find_cql('[word="qu.*"] "brown"')
     assert spans(df2) == [(0, 1, 3), (5, 1, 3)]
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan2
@@ -187,29 +187,29 @@ def test_seq_array_domain_plan(cidx, cidx_bs1):
     assert spans(cidx.find_cql('"mier"{2,2} "mier"')) == [(1, 3, 6)]
 
 
-def test_search_cache_plan_keyed(cidx_bs1):
+def test_search_cache_plan_keyed(cidx_spark):
     # SearchCache analog: repeated queries return the SAME persisted frame;
     # syntactic variants that rewrite to one plan share the entry. On
-    # cidx_bs1 every chain is above the driver path's bound: a driver-path
-    # LocalRelation is cached but never persisted
-    cidx_bs1.enable_search_cache()
-    cache = cidx_bs1._search_cache
-    r1 = spans(cidx_bs1.find_cql('"the" "quick"'))
+    # cidx_spark every chain runs on Spark: a driver-path LocalRelation is
+    # cached but never persisted
+    cidx_spark.enable_search_cache()
+    cache = cidx_spark._search_cache
+    r1 = spans(cidx_spark.find_cql('"the" "quick"'))
     assert (cache.hits, cache.misses) == (0, 1)
-    df2 = cidx_bs1.find_cql('"the" "quick"')
+    df2 = cidx_spark.find_cql('"the" "quick"')
     assert cache.hits == 1 and df2.is_cached
     assert spans(df2) == r1
     # ("the")("quick") rewrites to the same SeqNode → cache hit
-    cidx_bs1.find_cql('("the") ("quick")')
+    cidx_spark.find_cql('("the") ("quick")')
     assert (cache.hits, cache.misses) == (2, 1)
     # different plan → miss
-    cidx_bs1.find_cql('"the" [] "fox"')
+    cidx_spark.find_cql('"the" [] "fox"')
     assert cache.misses == 2
     # LRU eviction unpersists
     cache.max_entries = 1
-    cidx_bs1.find_cql('"may" "the"')
+    cidx_spark.find_cql('"may" "the"')
     assert len(cache._od) == 1
-    del cidx_bs1._search_cache
+    del cidx_spark._search_cache
 
 
 def test_cql_unquote_preserves_regex_escapes():

@@ -184,16 +184,36 @@ def fuzz_idx(spark, tmp_root):
     return Corpus(spark, path), toks
 
 
-@settings(max_examples=30, deadline=None)
-@given(q=_query)
-def test_cql_fuzz_matches_naive_evaluator(fuzz_idx, q):
-    c, docs_tokens = fuzz_idx
+@pytest.fixture(scope="module")
+def fuzz_idx_spark(spark, fuzz_idx):
+    """fuzz_idx's index with the driver path's postings bound at -1: the
+    postings kernels run on Spark instead of in the driver."""
+    c, toks = fuzz_idx
+    spark_c = Corpus(spark, c.paths.root)
+    spark_c._DRIVER_MAX_POSTINGS = -1
+    return spark_c, toks
+
+
+def _matches_naive(idx, q):
+    c, docs_tokens = idx
     expected = eval_cql(q, docs_tokens)
     got = {
         (r["doc_id"], r["start"], r["end"])
         for r in c.find_cql(q).select("doc_id", "start", "end").collect()
     }
     assert got == expected, q
+
+
+@settings(max_examples=30, deadline=None)
+@given(q=_query)
+def test_cql_fuzz_matches_naive_evaluator(fuzz_idx, q):
+    _matches_naive(fuzz_idx, q)
+
+
+@settings(max_examples=30, deadline=None)
+@given(q=_query)
+def test_cql_fuzz_matches_naive_evaluator_on_spark(fuzz_idx_spark, q):
+    _matches_naive(fuzz_idx_spark, q)
 
 
 # --------------- r4: sensitivity-layer fuzz (4-level routing) ---------------
@@ -294,13 +314,35 @@ def _naive_sens_eval(query, layers):
     return out
 
 
-@settings(max_examples=25, deadline=None)
-@given(q=_sens_query)
-def test_sensitivity_fuzz_matches_naive(sens_fuzz_idx, q):
+@pytest.fixture(scope="module")
+def sens_fuzz_idx_spark(spark, sens_fuzz_idx):
+    """sens_fuzz_idx with every layer's driver-path bound at -1 (Spark)."""
+    from blacklab_spark.annotated import AnnotatedCorpus
+
     ac, layers = sens_fuzz_idx
+    spark_ac = AnnotatedCorpus(spark, ac.root)
+    for c in spark_ac.layers.values():
+        c._DRIVER_MAX_POSTINGS = -1
+    return spark_ac, layers
+
+
+def _sens_matches_naive(idx, q):
+    ac, layers = idx
     expected = _naive_sens_eval(q, layers)
     got = {
         (r["doc_id"], r["start"], r["end"])
         for r in ac.find_cql(q).select("doc_id", "start", "end").collect()
     }
     assert got == expected, q
+
+
+@settings(max_examples=25, deadline=None)
+@given(q=_sens_query)
+def test_sensitivity_fuzz_matches_naive(sens_fuzz_idx, q):
+    _sens_matches_naive(sens_fuzz_idx, q)
+
+
+@settings(max_examples=25, deadline=None)
+@given(q=_sens_query)
+def test_sensitivity_fuzz_matches_naive_on_spark(sens_fuzz_idx_spark, q):
+    _sens_matches_naive(sens_fuzz_idx_spark, q)

@@ -1,9 +1,10 @@
-"""The driver path: a query whose driving postings fit in one block runs the
-same block kernels in-process and returns a LocalRelation, with no Spark job.
+"""The driver path: a query whose postings (the summed plan-time df of every
+term it reads) are at most Corpus._DRIVER_MAX_POSTINGS runs the same block
+kernels in-process and returns a LocalRelation, with no Spark job.
 
-One corpus is built twice. With the default block_size its rare terms take
-the driver path; with block_size=4 the same queries (every driving df ≥ 5)
-take the Spark path. Both must return the oracle's answer bit for bit."""
+One index is opened twice: as is, every query here takes the driver path; with
+the bound set to -1 on the opened Corpus, the same queries take the Spark
+path. Both must return the oracle's answer bit for bit."""
 
 import uuid
 
@@ -17,21 +18,26 @@ from blacklab_spark.incremental import add_to_index
 from blacklab_spark.tokenizer import tokenize
 
 
+def opened(spark, path, bound=None):
+    """A Corpus with its one-time loads done (each is a job of its own: the
+    term dict, parquet schema inference of both relations); `bound`
+    overrides the driver path's postings bound (-1: always Spark)."""
+    c = Corpus(spark, path)
+    c.lookup_terms([]), c.postings, c.docs
+    if bound is not None:
+        c._DRIVER_MAX_POSTINGS = bound
+    return c
+
+
 @pytest.fixture(scope="module")
 def pair(spark, tmp_root):
     pdf = make_transcripts(1500, seed=7, vocab_size=800)
-    df = spark.createDataFrame(pdf)
-    build_index(spark, df, f"{tmp_root}/dp_default")
-    build_index(spark, df, f"{tmp_root}/dp_bs4", block_size=4)
+    path = f"{tmp_root}/dp_default"
+    build_index(spark, spark.createDataFrame(pdf), path)
     ordered = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     texts = list(ordered["text"])
     oi = orc.build_oracle_index(list(zip(range(len(texts)), texts)))
-    local = Corpus(spark, f"{tmp_root}/dp_default")
-    remote = Corpus(spark, f"{tmp_root}/dp_bs4")
-    for c in (local, remote):  # one-time loads are jobs of their own:
-        c.lookup_terms([])  # the term dict
-        c.postings, c.docs  # parquet schema inference of both relations
-    return local, remote, oi, texts
+    return opened(spark, path), opened(spark, path, -1), oi, texts
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +76,11 @@ def run(spark, action):
 
 def rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def n_rows(df):
+    """Rows counted in the driver: count() on a LocalRelation is a job."""
+    return len(df.collect())
 
 
 def spans(df):
@@ -111,8 +122,8 @@ def test_scored_both_paths_match_oracle(spark, pair, picks, kind):
     got_remote, jobs_remote = run(spark, lambda: rows(query(remote)))
     assert got_local == expect
     assert got_remote == expect
-    assert jobs_local == 0  # driving df ≤ block_size: no Spark job
-    assert jobs_remote > 0  # driving df > block_size: the Spark path
+    assert jobs_local == 0  # postings read ≤ the bound: no Spark job
+    assert jobs_remote > 0  # bound -1: the Spark path
 
 
 def test_cql_and_page_both_paths_match_oracle(spark, pair, picks):
@@ -175,6 +186,132 @@ def test_page_window_and_caps_both_paths(spark, pair, picks):
     assert got_local == got_remote
     assert len(got_local[0]) == 2 and got_local[2:] == (3, (3, 1, 2, 1))
     assert jobs_local == 0 and jobs_remote > 0
+
+
+def chain_hits(texts, terms, gap_max=0):
+    """Spans of `terms[0] ... terms[-1]` with 0..gap_max free tokens before
+    the last term, counted from the tokens."""
+    out = []
+    for d, text in enumerate(texts):
+        toks = tokenize(text)
+        for p in range(len(toks)):
+            if toks[p:p + len(terms) - 1] != terms[:-1]:
+                continue
+            for g in range(gap_max + 1):
+                e = p + len(terms) + g
+                if e <= len(toks) and toks[e - 1] == terms[-1]:
+                    out.append((d, p, e))
+    return sorted(out)
+
+
+# query_heavy's shapes over stopwords and head terms: each reads more than
+# one block's worth (128) of postings, and far fewer than the bound.
+HEAVY = ["or_stop", "term_k1000", "and_stop_head", "phrase_stop", "cql_gap",
+         "cql_seq3", "page_group"]
+
+
+def heavy_case(kind, oi, texts):
+    """(terms read, query on a Corpus, expected answer) for one heavy kind."""
+    if kind == "or_stop":
+        q = ["the", "of", "is"]
+        return q, lambda c: rows(c.search_or(q, 10)), orc.topk_or(oi, q, 10)
+    if kind == "term_k1000":
+        q = ["w0002"]
+        return q, lambda c: rows(c.search_or(q, 1000)), orc.topk_or(oi, q, 1000)
+    if kind == "and_stop_head":
+        q = ["the", "w0002"]
+        return q, lambda c: rows(c.search_and(q, 10)), orc.topk_and(oi, q, 10)
+    if kind == "phrase_stop":
+        q = ["a", "the"]
+        return q, lambda c: rows(c.search_phrase(q, 10)), orc.topk_phrase(oi, q, 10)
+    if kind == "cql_gap":
+        q = ["the", "to"]
+        return (q, lambda c: n_rows(c.find_cql('"the" []{0,2} "to"')),
+                len(chain_hits(texts, q, 2)))
+    if kind == "cql_seq3":
+        q = ["a", "the", "of"]
+        return (q, lambda c: n_rows(c.find_cql('"a" "the" "of"')),
+                len(chain_hits(texts, q)))
+    q = ["a", "the"]
+    hits = chain_hits(texts, q)
+    n, cap = len(hits), len(hits) // 2
+    groups = {}
+    for d, _, _ in hits:
+        groups[d] = groups.get(d, 0) + 1
+
+    def request(c):
+        page = c.hits_page('"a" "the"', group_by="doc_id", max_count=cap, number=20)
+        return (
+            [tuple(r) for r in page.hits.collect()],
+            {r["doc_id"]: r["n_hits"] for r in page.groups.collect()},
+            tuple(page.summary.collect()[0]),
+        )
+
+    return q, request, (hits[:20], groups, (n, 0, cap, 1))
+
+
+@pytest.mark.parametrize("kind", HEAVY)
+def test_heavy_shapes_both_paths(spark, pair, kind):
+    """Stopword and head-term requests of many blocks run in the driver and
+    match the oracle (or the counted answer) on both paths."""
+    local, remote, oi, texts = pair
+    terms, query, expect = heavy_case(kind, oi, texts)
+    assert expect
+    assert sum(oi.df(t) for t in set(terms)) > 128
+    got_local, jobs_local = run(spark, lambda: query(local))
+    got_remote, jobs_remote = run(spark, lambda: query(remote))
+    assert got_local == expect
+    assert got_remote == expect
+    assert jobs_local == 0
+    assert jobs_remote > 0
+
+
+def test_group_page_with_caps_both_paths(spark, pair):
+    """group_by with max_process and max_count over driver-path hits: the
+    groups cover exactly the processed hits, as on Spark. Which hits are
+    processed follows scan order, which differs between the paths, so only
+    the group totals, window size and summary are compared."""
+    local, remote, _, _ = pair
+
+    def request(c):
+        page = c.hits_page('"a" "the"', group_by="doc_id", max_process=50,
+                           max_count=30, number=10)
+        groups = page.groups.collect()
+        return (
+            len(page.hits.collect()),
+            sum(r["n_hits"] for r in groups),
+            page.groups.columns,
+            tuple(page.summary.collect()[0]),
+        )
+
+    got_local, jobs_local = run(spark, lambda: request(local))
+    got_remote, jobs_remote = run(spark, lambda: request(remote))
+    assert got_local == got_remote == (10, 50, ["doc_id", "n_hits"], (50, 1, 30, 1))
+    assert local.hits_page('"a" "the"', group_by="doc_id").groups.dtypes == [
+        ("doc_id", "bigint"), ("n_hits", "bigint")]
+    assert jobs_local == 0 and jobs_remote > 0
+
+
+def test_bound_is_the_summed_df_read(spark, pair):
+    """The driver takes a query when the summed df of every term it reads is
+    at most the bound; one posting more and the same query runs Spark jobs.
+    An AND and a gap chain are bounded by all their terms, not the rarest."""
+    local, _, oi, texts = pair
+    and_terms = ["the", "w0002"]
+    cases = [
+        (and_terms, lambda c: rows(c.search_and(and_terms, 10)),
+         orc.topk_and(oi, and_terms, 10)),
+        (["a", "the"], lambda c: n_rows(c.find_cql('"a" []{0,2} "the"')),
+         len(chain_hits(texts, ["a", "the"], 2))),
+    ]
+    for terms, query, expect in cases:
+        c = opened(spark, local.paths.root)
+        summed = sum(oi.df(t) for t in terms)
+        c._DRIVER_MAX_POSTINGS = summed
+        assert run(spark, lambda: query(c)) == (expect, 0)
+        c._DRIVER_MAX_POSTINGS = summed - 1
+        got, jobs = run(spark, lambda: query(c))
+        assert got == expect and jobs > 0
 
 
 def test_tiny_split_sends_rare_term_to_spark(spark, pair, picks):

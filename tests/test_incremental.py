@@ -87,12 +87,18 @@ def test_post_append_chain_kernel_matches_join(spark, setup):
 
     path, oi = setup
     c = Corpus(spark, path)
+    on_spark = Corpus(spark, path)
+    on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
     queries = ['"the" "a"', '"the" []{0,2} "a"', '"w0001" [] "the"']
     for q in queries:
         kern = {
             (r["doc_id"], r["start"], r["end"])
             for r in c.find_cql(q).select("doc_id", "start", "end").collect()
         }
+        assert kern == {
+            (r["doc_id"], r["start"], r["end"])
+            for r in on_spark.find_cql(q).select("doc_id", "start", "end").collect()
+        }, q
         _os.environ["BLACKLAB_SEQ_KERNEL"] = "join"
         try:
             join = {

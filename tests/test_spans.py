@@ -118,6 +118,8 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
     path = f"{tmp_root}/pchain_idx"
     build_index(spark, spark.createDataFrame(fixture_corpus()), path, block_size=3)
     c = Corpus(spark, path)
+    on_spark = Corpus(spark, path)
+    on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
 
     cases = [
         [(["the"], 0), (["quick"], 1)],
@@ -131,6 +133,10 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
             (r["doc_id"], tuple(r["positions"]))
             for r in c.positions_chain(clauses).collect()
         }
+        assert kernel == {
+            (r["doc_id"], tuple(r["positions"]))
+            for r in on_spark.positions_chain(clauses).collect()
+        }, clauses
         # join path: intersect shifted per-doc arrays
         acc = None
         from blacklab_spark.operators import spans as S
@@ -160,6 +166,8 @@ def test_spans_chain_vargap_matches_join(spark, tmp_root):
     path = f"{tmp_root}/vgap_idx"
     build_index(spark, spark.createDataFrame(fixture_corpus()), path, block_size=3)
     c = Corpus(spark, path)
+    on_spark = Corpus(spark, path)
+    on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
 
     cases = [
         ([(["the"], 0)], 1, ["fox"], 0, 2),
@@ -172,6 +180,10 @@ def test_spans_chain_vargap_matches_join(spark, tmp_root):
             (r["doc_id"], r["start"], r["end"])
             for r in c.spans_chain_vargap(clauses, w, tail, gmin, gmax).collect()
         }
+        assert kern == {
+            (r["doc_id"], r["start"], r["end"])
+            for r in on_spark.spans_chain_vargap(clauses, w, tail, gmin, gmax).collect()
+        }, (clauses, tail, gmin, gmax)
         acc = None
         for terms, off in clauses:
             p = c.positions_of_terms(terms)
