@@ -35,32 +35,11 @@ DEFAULT_BLOCK_SIZE = 128
 
 # ---------------------------------------------------------------- varint ----
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array. Vectorized: loops only over byte slots (<=10)."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nb = np.ones(v.size, dtype=np.int64)
-    t = v >> np.uint64(7)
-    while t.any():
-        nb += (t > 0).astype(np.int64)
-        t = t >> np.uint64(7)
-    total = int(nb.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    for j in range(int(nb.max())):
-        m = nb > j
-        b = ((v[m] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[m] - 1) > j
-        b[cont] |= 0x80
-        out[starts[m] + j] = b
-    return out.tobytes()
-
-
 def varint_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Like varint_encode, but also returns per-value byte lengths so callers
-    can slice the buffer into sub-ranges (used to split one batch-wide encode
-    into per-group byte strings without re-encoding)."""
+    """LEB128-encode a uint64 array, with per-value byte lengths so callers
+    can slice the buffer into sub-ranges (used to split one batch-wide
+    encode into per-group byte strings without re-encoding). Vectorized:
+    loops only over byte slots (<=10)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if v.size == 0:
         return b"", np.zeros(0, dtype=np.int64)
@@ -79,6 +58,11 @@ def varint_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
         b[cont] |= 0x80
         out[starts[m] + j] = b
     return out.tobytes(), nb
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array."""
+    return varint_encode_with_lengths(values)[0]
 
 
 def varint_decode(buf: bytes) -> np.ndarray:

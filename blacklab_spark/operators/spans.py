@@ -234,35 +234,6 @@ def repetition(base: DataFrame, min_rep: int, max_rep: int) -> DataFrame:
     return out.dropDuplicates(SPAN_COLS)
 
 
-# --- array-domain sequence algebra ------------------------------------------
-# A single-position clause (term, regex expansion, synonym set) is held as
-# ONE row per doc: (doc_id, positions sorted array<long>). Sequences of such
-# clauses then compile to JVM array_intersect of shifted arrays — a
-# docs-sized shuffle instead of a positions×positions row join (the
-# score_phrase trick generalized to whole clause chains; the reference's
-# analog is SpansSequenceSimple's two-spans walk,
-# /root/reference/engine/src/main/java/nl/inl/blacklab/search/lucene/
-# SpansSequenceSimple.java, done set-at-a-time).
-
-
-def seq_positions_extend(pa: DataFrame, pb: DataFrame, offset: int) -> DataFrame:
-    """One FIXED-gap sequence step in the array domain: keep prefix starts s
-    with s + offset ∈ P_b. Both inputs are (doc_id, positions); output the
-    same shape, rows with no surviving starts dropped."""
-    a = pa.select("doc_id", F.col("positions").alias("pa"))
-    b = pb.select("doc_id", F.col("positions").alias("pb"))
-    return (
-        a.join(b, "doc_id")
-        .select(
-            "doc_id",
-            F.array_intersect(
-                "pa", F.transform("pb", lambda x: x - offset)
-            ).alias("positions"),
-        )
-        .filter(F.size("positions") > 0)
-    )
-
-
 def spans_from_positions(pdf: DataFrame, width: int) -> DataFrame:
     """(doc_id, positions) → fixed-width spans (doc_id, start, end). Driver-
     path positions (a plan that optimizes to a LocalRelation) are exploded
@@ -280,29 +251,6 @@ def spans_from_positions(pdf: DataFrame, width: int) -> DataFrame:
         "doc_id",
         F.col("s").cast("int").alias("start"),
         (F.col("s") + width).cast("int").alias("end"),
-    )
-
-
-def seq_positions_pair(
-    pa: DataFrame, width_a: int, pb: DataFrame, gap_min: int, gap_max: int
-) -> DataFrame:
-    """Array-domain sequence with a VARIABLE gap: prefix (width width_a,
-    starts P_a) followed by a single-position clause P_b after a gap in
-    [gap_min, gap_max]. One shift per gap value, still docs-sized rows."""
-    a = pa.select("doc_id", F.col("positions").alias("pa"))
-    b = pb.select("doc_id", F.col("positions").alias("pb"))
-    shifts = F.explode(
-        F.sequence(F.lit(width_a + gap_min), F.lit(width_a + gap_max))
-    ).alias("sh")
-    j = a.join(b, "doc_id").select("doc_id", "pa", "pb", shifts)
-    starts = F.array_intersect("pa", F.transform("pb", lambda x: x - F.col("sh")))
-    return (
-        j.select("doc_id", "sh", F.explode(starts).alias("s"))
-        .select(
-            "doc_id",
-            F.col("s").cast("int").alias("start"),
-            (F.col("s") + F.col("sh") + 1).cast("int").alias("end"),
-        )
     )
 
 

@@ -55,7 +55,6 @@ expand into OR-alternatives (EmptyClauseAlts rewrite,
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -823,10 +822,9 @@ class CqlCompiler:
 
     def _pos_clause(self, u: Unit) -> tuple[str, list[str]] | None:
         """(layer, terms) when the unit is one unlabeled, unnegated,
-        (1,1)-quantified token clause — eligible for the ARRAY-DOMAIN
-        sequence path (per-doc position arrays + array_intersect) whether
-        it is a plain term, a regex expansion, or a sensitivity-routed
-        clause."""
+        (1,1)-quantified token clause — eligible for a positions_chain run
+        whether it is a plain term, a regex expansion, or a
+        sensitivity-routed clause."""
         if u.label is not None or (u.m, u.n) != (1, 1):
             return None
         if not isinstance(u.node, TokenNode):
@@ -1243,76 +1241,35 @@ class CqlCompiler:
             out = out.unionByName(f)
         return out.dropDuplicates(cols)
 
-    def _run_positions(self, run: list[tuple[str, list[str], int]]) -> DataFrame:
-        """Fold a RUN of single-position clauses [(annot, terms, offset)] into
-        one (doc_id, positions) frame in run-start coordinates, intersecting
-        RAREST CLAUSE FIRST (ascending total df — score_phrase's
-        ClauseCombinerNfa cost ordering, corpus.py). Intersection with offset
-        bookkeeping is commutative, so anchoring at the lowest-df clause is
-        free exactness-wise and means the smallest array drives every
-        subsequent array_intersect — a stop-word-first chain like
-        "the" "of" "and" no longer intersects its two biggest arrays first.
-        Layers may differ across the run: annotation layers are
-        position-aligned by construction (annotated.build_annotated_index)."""
-        layer_objs = {a: self._layer(a) for a in {an for an, _, _ in run}}
-        if (
-            len(run) > 1
-            and all(hasattr(c, "positions_chain") for c in layer_objs.values())
-            and os.environ.get("BLACKLAB_SEQ_KERNEL") != "join"
-        ):
-            # the doc-range co-located kernel — one shuffle of compressed
-            # blocks, partition-local rarest-first intersect with candidate
-            # block skipping (no per-clause join at all). r5: cross-LAYER
-            # runs ([lemma="x"] [pos="y"]) ride the same kernel — layers
-            # share the docID space by construction, blocks are keyed
-            # (layer, term_id)
-            anchor = layer_objs[run[0][0]]
-            return anchor.positions_chain(
-                [(terms, off, layer_objs[a]) for a, terms, off in run]
-            )
-        infos = []
-        for annot, terms, off in run:
-            ti = self._layer(annot).lookup_terms(terms)
-            infos.append((int(ti["df"].sum()) if len(ti) else 0, annot, terms, off))
-        # BLACKLAB_SEQ_ORDER=left restores the pre-r4 left-to-right order —
-        # kept ONLY as the A/B baseline for benchmark evidence
-        if os.environ.get("BLACKLAB_SEQ_ORDER") == "left":
-            infos.sort(key=lambda t: t[3])
-        else:
-            infos.sort(key=lambda t: (t[0], t[3]))
-        acc_p = None
-        for _, annot, terms, off in infos:
-            p = self._layer(annot).positions_of_terms(terms)
-            if acc_p is None:
-                # anchor, rebased to run-start coordinates (intermediate
-                # negatives are fine: the off=0 clause prunes them later)
-                acc_p = (
-                    p if off == 0
-                    else p.select(
-                        "doc_id",
-                        F.transform(
-                            "positions", lambda x: x - F.lit(off)
-                        ).alias("positions"),
-                    )
-                )
-            else:
-                acc_p = S.seq_positions_extend(acc_p, p, off)
-        return acc_p
+    def _chain(
+        self, run: list[tuple[str, list[str], int]], vargap_tail=None
+    ) -> DataFrame:
+        """A RUN of single-position clauses [(annot, terms, offset)] through
+        the doc-range positions-chain kernel (Corpus.positions_chain): one
+        shuffle of compressed blocks, intersected RAREST CLAUSE FIRST
+        (ClauseCombinerNfa's cost ordering), no per-clause join. Returns
+        (doc_id, positions) in run-start coordinates, or spans with a
+        `vargap_tail=(terms, width, gap_min, gap_max, layer_corpus)`. Layers
+        may differ across the run: annotation layers are position-aligned by
+        construction (annotated.build_annotated_index)."""
+        return self._layer(run[0][0]).positions_chain(
+            [(terms, off, self._layer(a)) for a, terms, off in run],
+            vargap_tail=vargap_tail,
+        )
 
     def _compile_seq_concrete(self, units: list[Unit]) -> DataFrame:
         """Left-to-right sequence compile. Runs of single-position clauses
         (plain terms, regex expansions, sensitivity-routed — _pos_clause)
-        stay in the ARRAY DOMAIN: one (doc_id, positions) row per doc per
-        clause, collected per fixed-gap run and intersected rarest-first
-        (_run_positions), one shift-explode per VARIABLE finite gap — so a
-        whole stop-word phrase shuffles doc rows, never position rows. Only
-        captures, repetitions, any-token units and unbounded gaps fall back
-        to the row-level _seq_join. r5: runs AFTER a materialized prefix
+        are collected per fixed-gap run and intersected rarest-first in the
+        positions-chain kernel (_chain), a VARIABLE finite gap after the
+        first run included — so a whole stop-word phrase shuffles compressed
+        blocks, never position rows. Only captures, repetitions, any-token
+        units and unbounded gaps fall back to the row-level _seq_join. r5: runs AFTER a materialized prefix
         (e.g. following a capture unit or a second variable gap) also fold
         in the kernel and join the prefix ONCE — a chain broken by one
         non-kernel unit costs one row join, not one per remaining clause."""
         acc = None
-        run: list[tuple[str, list[str], int]] = []  # array-domain clause run
+        run: list[tuple[str, list[str], int]] = []  # positions_chain clause run
         run_width = 0
         # gap between the materialized prefix and the current run's start
         # (None while the run IS the prefix)
@@ -1325,7 +1282,7 @@ class CqlCompiler:
             nonlocal acc, run, run_width, run_gap
             if run:
                 sp = S.spans_from_positions(
-                    self._run_positions(run), run_width
+                    self._chain(run), run_width
                 )
                 if acc is None:
                     acc = sp
@@ -1391,7 +1348,7 @@ class CqlCompiler:
             gmin, gmax = pend_gap or (0, 0)
             pend_gap = None
             if pc is not None and run and gmin == gmax:
-                # fixed gap: stay in the array domain, width grows —
+                # fixed gap: stay in the run, width grows —
                 # prefix AND suffix runs alike
                 annot, terms = pc
                 run.append((annot, terms, run_width + gmin))
@@ -1409,34 +1366,14 @@ class CqlCompiler:
             if acc is None and run and pc is not None:
                 annot, terms = pc
                 if gmax < UNBOUNDED:
-                    # variable finite gap: fold the run rarest-first, then
-                    # one intersect per gap value, spans out — inside the
-                    # doc-range kernel (cross-layer runs included, r5)
-                    lobjs = {a: self._layer(a) for a, _, _ in run}
-                    anchor = lobjs[run[0][0]]
-                    if (
-                        hasattr(anchor, "spans_chain_vargap")
-                        and all(
-                            hasattr(c, "positions_chain")
-                            for c in lobjs.values()
-                        )
-                        and hasattr(self._layer(annot), "positions_chain")
-                        and os.environ.get("BLACKLAB_SEQ_KERNEL") != "join"
-                    ):
-                        acc = anchor.spans_chain_vargap(
-                            [(t, off, lobjs[a]) for a, t, off in run],
-                            run_width, terms, gmin, gmax,
-                            tail_corpus=self._layer(annot),
-                        )
-                        run, run_width = [], 0
-                        continue
-                    apdf, w = self._run_positions(run), run_width
-                    run, run_width = [], 0
-                    acc = S.seq_positions_pair(
-                        apdf, w,
-                        self._layer(annot).positions_of_terms(terms),
-                        gmin, gmax,
+                    # variable finite gap: the run and the tail clause in ONE
+                    # kernel pass — one intersect per gap value, spans out
+                    # (cross-layer runs included, r5)
+                    acc = self._chain(
+                        run,
+                        (terms, run_width, gmin, gmax, self._layer(annot)),
                     )
+                    run, run_width = [], 0
                     continue
             if pc is not None and run:
                 # variable gap inside a SUFFIX run (or unbounded gap after a

@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the blacklab_spark package
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_memory() -> str:
     """The driver heap get_spark asks for when none is given: half the
@@ -65,4 +68,11 @@ def get_spark(
         builder = builder.config("spark.local.dir", shm)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers unpickle kernels that import blacklab_spark: put the
+    # package's parent first on their path (the spark.executorEnv.PYTHONPATH
+    # they start with), so they find it whatever their working directory
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PKG_PARENT, *paths])
     return spark

@@ -132,11 +132,6 @@ def tokenize_sensitive(text: str) -> list[str]:
     return TOKEN_RE_SENSITIVE.findall(text)
 
 
-def tokenize_sensitive_series(texts: pd.Series) -> pd.Series:
-    """Vectorized case-preserving tokenizer."""
-    return texts.fillna("").str.findall(TOKEN_RE_SENSITIVE)
-
-
 # --- accent folding (the di/i levels) ----------------------------------------
 
 def _build_accent_map() -> dict[int, str]:
@@ -192,10 +187,6 @@ def fold_accents(s: str) -> str:
     expression). str.translate accepts 1:n values, so one pass covers both
     the accent and digraph parts."""
     return s.translate(_FULL_FOLD_MAP)
-
-
-def fold_accents_series(s: pd.Series) -> pd.Series:
-    return s.str.translate(_FULL_FOLD_MAP)
 
 
 def fold_sql(expr: str) -> str:

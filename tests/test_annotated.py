@@ -41,6 +41,21 @@ def spans(df):
     return sorted((r["doc_id"], r["start"], r["end"]) for r in df.collect())
 
 
+def naive_spans(query, *conllu):
+    """The naive span evaluator of test_cql_fuzz over CoNLL-U sentences
+    (one doc each, in order), every position a {layer: lowercased value}."""
+    from tests.test_cql_fuzz import eval_cql
+
+    docs = [
+        [
+            dict(zip(("word", "lemma", "pos"), ln.lower().split("\t")[1:4]))
+            for ln in sent.splitlines() if not ln.startswith("#")
+        ]
+        for text in conllu for sent in text.strip().split("\n\n")
+    ]
+    return sorted(eval_cql(query, dict(enumerate(docs))))
+
+
 def test_layers_aligned(acorp):
     # all layers share docIDs and doc lengths (position alignment)
     dls = {
@@ -105,18 +120,14 @@ def test_annotated_append(spark, tmp_root, tmp_path_factory):
     assert spans(ac.find_cql('[lemma="cat"]')) == [(3, 0, 1)]
     assert spans(ac.find_cql('[word="bark" & pos="verb"]')) == [(0, 2, 3), (3, 1, 2)]
     # r5: cross-layer chains through the kernel on the MULTI-SEGMENT
-    # (appended) index must match the join baseline — the appended segment's
-    # block_no offsets and docID shifts ride the same (layer, term_id) keying
-    import os
-    chain_qs = ['[pos="noun"] [pos="verb"]', '[lemma="cat"] []{0,1} [pos="verb"]']
-    kernel = {q: spans(ac.find_cql(q)) for q in chain_qs}
-    os.environ["BLACKLAB_SEQ_KERNEL"] = "join"
-    try:
-        join_r = {q: spans(ac.find_cql(q)) for q in chain_qs}
-    finally:
-        del os.environ["BLACKLAB_SEQ_KERNEL"]
-    assert kernel == join_r
-    assert kernel['[pos="noun"] [pos="verb"]'] == [(0, 1, 3), (1, 1, 3), (3, 0, 2)]
+    # (appended) index must match the naive evaluator — the appended
+    # segment's block_no offsets and docID shifts ride the same
+    # (layer, term_id) keying
+    for q in ['[pos="noun"] [pos="verb"]', '[lemma="cat"] []{0,1} [pos="verb"]']:
+        assert spans(ac.find_cql(q)) == naive_spans(q, CONLLU, delta), q
+    assert spans(ac.find_cql('[pos="noun"] [pos="verb"]')) == [
+        (0, 1, 3), (1, 1, 3), (3, 0, 2)
+    ]
 
 
 def test_unknown_layer_errors(acorp):
@@ -133,11 +144,11 @@ def test_word_only_corpus_rejects_lemma(spark, tmp_root):
     with pytest.raises(ValueError, match="unknown annotation"):
         Corpus(spark, path).find_cql('[lemma="x"]').collect()
 
-def test_cross_layer_chain_kernel_matches_join(acorp, monkeypatch):
+def test_cross_layer_chain_kernel_matches_naive_evaluator(acorp):
     # r5 (VERDICT #7): cross-layer fixed-gap chains (and the variable-gap
     # tail) run in the positions-chain kernel — blocks keyed (layer,
-    # term_id), one doc-range shuffle. The BLACKLAB_SEQ_KERNEL=join baseline
-    # must produce identical spans for every chain shape.
+    # term_id), one doc-range shuffle. The driver and Spark paths must both
+    # produce the naive evaluator's spans for every chain shape.
     queries = [
         '[pos="det"] [lemma="dog"]',
         '[pos="det"] [lemma="dog"] [word="bark.*"]',
@@ -150,10 +161,7 @@ def test_cross_layer_chain_kernel_matches_join(acorp, monkeypatch):
     for layer in on_spark.layers.values():
         layer._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
     assert kernel == {q: spans(on_spark.find_cql(q)) for q in queries}
-    monkeypatch.setenv("BLACKLAB_SEQ_KERNEL", "join")
-    join = {q: spans(acorp.find_cql(q)) for q in queries}
-    monkeypatch.delenv("BLACKLAB_SEQ_KERNEL")
-    assert kernel == join
+    assert kernel == {q: naive_spans(q, CONLLU) for q in queries}
     assert kernel['[pos="det"] [lemma="dog"]'] == [(0, 0, 2), (1, 0, 2)]
     # non-empty guards: the parity must not be vacuous
     assert all(kernel[q] for q in queries[:3]), kernel

@@ -4,6 +4,8 @@ Mirrors the reference's golden-response suite (SURVEY.md §5.1 item 6):
 every query's (doc_id, score) list must be rank-identical AND float64
 bitwise-equal to the oracle, with tie-break (score desc, doc_id asc)."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -217,14 +219,18 @@ def test_small_corpus_or_and_phrase(small):
 
 
 def test_spans_term_postings_backed(small):
-    """Corpus.spans_term decodes spans from the positional postings: the plan
-    must read the postings table and must NOT scan the docs table. On the
-    driver path the same spans come back as a LocalRelation."""
+    """Corpus.spans_term decodes spans from the positional postings: the
+    frame must read only postings files, never the docs table. On the driver
+    path the same spans come back as a LocalRelation."""
+    from urllib.parse import urlparse
+
     c, oi, _ = small
     sp = spark_path(c).spans_term("the")
-    plan = sp._jdf.queryExecution().toString()
-    assert "postings" in plan
-    assert "/docs" not in plan
+    files = [urlparse(f).path for f in sp.inputFiles()]
+    postings = os.path.abspath(c.paths.postings) + os.sep
+    docs = os.path.abspath(c.paths.docs) + os.sep
+    assert files and all(f.startswith(postings) for f in files), files
+    assert not any(f.startswith(docs) for f in files), files
     got = sorted((r["doc_id"], r["start"], r["end"]) for r in sp.collect())
     exp = sorted(
         (d, p, p + 1) for d, ps in oi.positions["the"].items() for p in ps

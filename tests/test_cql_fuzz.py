@@ -31,9 +31,11 @@ from blacklab_spark.tokenizer import tokenize
 
 # ------------------------------------------------ naive span evaluator -----
 
-def _tok_match(expr, tok: str) -> bool:
+def _tok_match(expr, tok) -> bool:
     if isinstance(expr, TokClause):
-        hit = re.fullmatch(expr.pattern, tok) is not None
+        # a token is its word, or {annotation: value} on an annotated corpus
+        val = tok[expr.annot] if isinstance(tok, dict) else tok
+        hit = re.fullmatch(expr.pattern, val) is not None
         return hit != expr.negate
     if isinstance(expr, TokAnd):
         return _tok_match(expr.a, tok) and _tok_match(expr.b, tok)
@@ -143,13 +145,30 @@ _atom = st.one_of(
 )
 _quant = st.sampled_from(["", "", "?", "{1,2}", "{2,2}", "{0,1}", "+", "{2,}"])
 _unit = st.builds(lambda a, q: a + q, _atom, _quant)
-_gap = st.sampled_from(["[]", "[]{0,1}", "[]{1,2}", "[]{0,2}", "[]*"])
+_gap = st.sampled_from(["", "[]", "[]{0,1}", "[]{1,2}", "[]{0,2}", "[]*"])
 
+# single-position clauses: words, a regex, regex alternations (OR of terms)
+_run_atom = st.sampled_from(
+    [f'"{w}"' for w in VOCAB]
+    + ['[word="m.*"]', '[word="[a-m].*"]', '[word="noot|aap"]',
+       '[word="th.*|fox"]']
+)
+# a fixed-gap run of 2-3 clauses, adjacent or one token apart
+_run = st.lists(
+    st.tuples(st.sampled_from(["", "[] "]), _run_atom), min_size=2, max_size=3
+).map(lambda xs: xs[0][1] + "".join(f" {g}{a}" for g, a in xs[1:]))
+
+# head, then optionally a gap and a tail: a one-clause head followed by a
+# quantified unit, an unbounded gap or (in _query) a lookahead closes a
+# one-clause run
 _seq = st.builds(
-    lambda head, gap, tail: " ".join([head] + ([gap + " " + tail] if tail else [])),
-    _unit.filter(lambda u: not u.endswith("?") and "{0," not in u),
+    lambda head, gap, tail:
+        " ".join(filter(None, (head, gap, tail))) if tail else head,
+    st.one_of(
+        _unit.filter(lambda u: not u.endswith("?") and "{0," not in u), _run
+    ),
     _gap,
-    st.one_of(st.none(), _unit),
+    st.one_of(st.none(), _unit, _run),
 )
 
 _posfilter_op = st.sampled_from([

@@ -79,13 +79,19 @@ def test_compact_restores_bounds_and_parity(spark, setup):
     assert rows(c.search_or(["the"], k=5)) == orc.topk_term(oi, "the", 5)
 
 
-def test_post_append_chain_kernel_matches_join(spark, setup):
+def test_post_append_chain_kernel_matches_naive_evaluator(spark, setup):
     # the r4 positions-chain kernel must handle MULTI-SEGMENT indexes (a doc
     # lives in exactly one segment; the kernel is block_no-agnostic) — pin
-    # kernel == join on the appended index for fixed and variable gaps
-    import os as _os
+    # the driver and Spark paths to the naive span evaluator over the
+    # appended corpus's tokens, for fixed and variable gaps
+    from tests.test_cql_fuzz import eval_cql
 
     path, oi = setup
+    docs_tokens = {d: [None] * n for d, n in oi.dl.items()}
+    for term, per_doc in oi.positions.items():
+        for d, ps in per_doc.items():
+            for p in ps:
+                docs_tokens[d][p] = term
     c = Corpus(spark, path)
     on_spark = Corpus(spark, path)
     on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
@@ -99,16 +105,10 @@ def test_post_append_chain_kernel_matches_join(spark, setup):
             (r["doc_id"], r["start"], r["end"])
             for r in on_spark.find_cql(q).select("doc_id", "start", "end").collect()
         }, q
-        _os.environ["BLACKLAB_SEQ_KERNEL"] = "join"
-        try:
-            join = {
-                (r["doc_id"], r["start"], r["end"])
-                for r in c.find_cql(q).select("doc_id", "start", "end").collect()
-            }
-        finally:
-            _os.environ.pop("BLACKLAB_SEQ_KERNEL", None)
-        assert kern == join, q
+        assert kern == eval_cql(q, docs_tokens), q
         assert len(kern) > 0, q
+        # hits in the appended segment too (docIDs from the base's n_docs)
+        assert max(d for d, _, _ in kern) >= 1200, q
 
 
 def test_fold_version_gate(spark, tmp_root):

@@ -106,11 +106,26 @@ def test_fuzzy_terms(spark, docs):
     assert got0 == ["a"]
 
 
-def test_positions_chain_matches_join_path(spark, tmp_root):
-    # the r4 doc-range chain kernel must equal the join formulation
-    # exactly — spans, phrase freqs, and dl side-channel
-    import pandas as pd
+def _fixture_tokens():
+    from blacklab_spark.datagen import fixture_corpus
+    from blacklab_spark.tokenizer import tokenize
 
+    return {i: tokenize(t) for i, t in enumerate(fixture_corpus()["text"])}
+
+
+def _chain_starts(toks, clauses):
+    """Run-start positions s with toks[s + off] in terms for every clause:
+    the fixed-gap chain, evaluated by scanning the tokens."""
+    return [
+        s for s in range(len(toks))
+        if all(s + off < len(toks) and toks[s + off] in terms
+               for terms, off in clauses)
+    ]
+
+
+def test_positions_chain_matches_token_scan(spark, tmp_root):
+    # the doc-range chain kernel, in the driver and on Spark, must equal a
+    # scan of the tokens exactly — positions and the dl side-channel
     from blacklab_spark.build import build_index
     from blacklab_spark.corpus import Corpus
     from blacklab_spark.datagen import fixture_corpus
@@ -120,6 +135,7 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
     c = Corpus(spark, path)
     on_spark = Corpus(spark, path)
     on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
+    docs_tokens = _fixture_tokens()
 
     cases = [
         [(["the"], 0), (["quick"], 1)],
@@ -127,6 +143,8 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
         [(["the"], 0), (["quick", "fox"], 1)],     # multi-term clause
         [(["zzzmissing"], 0), (["the"], 1)],       # vocab miss -> empty
         [(["the"], 0), (["the"], 1), (["the"], 2)],
+        [(["mier", "aap"], 0)],                    # one multi-term clause
+        [(["be"], 0), (["with", "that"], 1), (["you", "is"], 2)],
     ]
     for clauses in cases:
         kernel = {
@@ -137,17 +155,12 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
             (r["doc_id"], tuple(r["positions"]))
             for r in on_spark.positions_chain(clauses).collect()
         }, clauses
-        # join path: intersect shifted per-doc arrays
-        acc = None
-        from blacklab_spark.operators import spans as S
-        for terms, off in clauses:
-            p = c.positions_of_terms(terms)
-            acc = p if acc is None else S.seq_positions_extend(acc, p, off)
-        join = {
-            (r["doc_id"], tuple(r["positions"]))
-            for r in (acc.collect() if acc is not None else [])
-        }
-        assert kernel == join, clauses
+        scan = {(d, tuple(_chain_starts(toks, clauses)))
+                for d, toks in docs_tokens.items()}
+        assert kernel == {(d, p) for d, p in scan if p}, clauses
+    # non-empty guard: the parity must not be vacuous
+    assert c.positions_chain(cases[0]).count() == 2
+    assert c.positions_chain(cases[-1]).count() == 2
 
     # dl side-channel matches the docs table
     chain = c.positions_chain([(["the"], 0), (["quick"], 1)], with_dl=True)
@@ -156,18 +169,19 @@ def test_positions_chain_matches_join_path(spark, tmp_root):
         assert r["dl"] == dls[r["doc_id"]]
 
 
-def test_spans_chain_vargap_matches_join(spark, tmp_root):
-    # the variable-gap kernel tail must equal seq_positions_pair exactly
+def test_positions_chain_vargap_matches_token_scan(spark, tmp_root):
+    # the variable-gap kernel tail, in the driver and on Spark, must equal a
+    # scan of the tokens exactly
     from blacklab_spark.build import build_index
     from blacklab_spark.corpus import Corpus
     from blacklab_spark.datagen import fixture_corpus
-    from blacklab_spark.operators import spans as S
 
     path = f"{tmp_root}/vgap_idx"
     build_index(spark, spark.createDataFrame(fixture_corpus()), path, block_size=3)
     c = Corpus(spark, path)
     on_spark = Corpus(spark, path)
     on_spark._DRIVER_MAX_POSTINGS = -1  # the kernel's Spark path
+    docs_tokens = _fixture_tokens()
 
     cases = [
         ([(["the"], 0)], 1, ["fox"], 0, 2),
@@ -175,23 +189,25 @@ def test_spans_chain_vargap_matches_join(spark, tmp_root):
         ([(["the"], 0)], 1, ["quick", "fox"], 1, 3),
         ([(["the"], 0)], 1, ["zzzmissing"], 0, 2),
     ]
+    hits = 0
     for clauses, w, tail, gmin, gmax in cases:
-        kern = {
-            (r["doc_id"], r["start"], r["end"])
-            for r in c.spans_chain_vargap(clauses, w, tail, gmin, gmax).collect()
+        def spans_of(corpus):
+            return {
+                (r["doc_id"], r["start"], r["end"])
+                for r in corpus.positions_chain(
+                    clauses, vargap_tail=(tail, w, gmin, gmax)
+                ).collect()
+            }
+
+        kern = spans_of(c)
+        assert kern == spans_of(on_spark), (clauses, tail, gmin, gmax)
+        scan = {
+            (d, s, s + w + g + 1)
+            for d, toks in docs_tokens.items()
+            for s in _chain_starts(toks, clauses)
+            for g in range(gmin, gmax + 1)
+            if s + w + g < len(toks) and toks[s + w + g] in tail
         }
-        assert kern == {
-            (r["doc_id"], r["start"], r["end"])
-            for r in on_spark.spans_chain_vargap(clauses, w, tail, gmin, gmax).collect()
-        }, (clauses, tail, gmin, gmax)
-        acc = None
-        for terms, off in clauses:
-            p = c.positions_of_terms(terms)
-            acc = p if acc is None else S.seq_positions_extend(acc, p, off)
-        join = {
-            (r["doc_id"], r["start"], r["end"])
-            for r in S.seq_positions_pair(
-                acc, w, c.positions_of_terms(tail), gmin, gmax
-            ).collect()
-        }
-        assert kern == join, (clauses, tail, gmin, gmax)
+        assert kern == scan, (clauses, tail, gmin, gmax)
+        hits += len(kern)
+    assert hits > 0  # non-empty guard
