@@ -167,13 +167,32 @@ def encode_blocks(
     return blocks
 
 
+def decode_blocks(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode a run of blocks → flat (doc_ids, tfs, dls) int64 in block
+    order, plus each block's posting count — the inverse of the build's
+    batch-wide encoder. `blocks` maps first_doc_id/doc_gaps/tfs/dls to
+    per-block columns (a pandas frame, an Arrow batch's to_pydict()). One
+    varint pass per column over the concatenated bytes; the doc-gap sums
+    restart at every block (each block's first gap is 0)."""
+    gap_bytes = blocks["doc_gaps"]
+    buf = b"".join(gap_bytes)
+    # a block's count = the varints ending (high bit clear) inside its bytes
+    ends = np.flatnonzero(np.frombuffer(buf, dtype=np.uint8) < 0x80)
+    byte_ends = np.cumsum(np.fromiter(map(len, gap_bytes), np.int64))
+    counts = np.diff(np.searchsorted(ends, byte_ends), prepend=0)
+    cs = np.cumsum(varint_decode(buf).astype(np.int64))
+    before = np.concatenate(([0], cs))[np.cumsum(counts) - counts]
+    first = np.asarray(blocks["first_doc_id"], dtype=np.int64)
+    doc_ids = cs + np.repeat(first - before, counts)
+    tfs = varint_decode(b"".join(blocks["tfs"])).astype(np.int64)
+    dls = varint_decode(b"".join(blocks["dls"])).astype(np.int64)
+    return doc_ids, tfs, dls, counts
+
+
 def decode_block(block: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode one block → (doc_ids int64, tfs int64, dls int64)."""
-    gaps = varint_decode(block["doc_gaps"]).astype(np.int64)
-    doc_ids = np.cumsum(gaps) + np.int64(block["first_doc_id"])
-    tfs = varint_decode(block["tfs"]).astype(np.int64)
-    dls = varint_decode(block["dls"]).astype(np.int64)
-    return doc_ids, tfs, dls
+    cols = ("first_doc_id", "doc_gaps", "tfs", "dls")
+    return decode_blocks({c: [block[c]] for c in cols})[:3]
 
 
 def decode_block_positions(block: dict) -> np.ndarray:

@@ -13,9 +13,10 @@ with DataFrame plans:
                         ClauseCombinerNfa.getFactor (/root/reference/engine/src/
                         main/java/nl/inl/blacklab/search/lucene/optimize/
                         ClauseCombinerNfa.java:144-201)
-  * block-max pruning → single-term top-k skips blocks whose exact
-                        block_max_score cannot beat the running k-th score
-                        (block-max WAND over a bounded heap, partition-local)
+  * block-max pruning → single-term top-k decodes the highest-bound blocks
+                        first, then drops every block whose exact
+                        block_max_score is below θ, the k-th best score so
+                        far (block-max WAND as a filter, partition-local)
   * top-k             → orderBy(score desc, doc_id asc).limit(k) — Spark
                         compiles this to TakeOrderedAndProject (bounded
                         per-partition heaps + driver merge, no global sort)
@@ -39,7 +40,6 @@ rank of the term string), bitwise-identical to the oracle's accumulation.
 
 from __future__ import annotations
 
-import heapq
 import json
 import math
 import os
@@ -116,80 +116,70 @@ def _blocks_holding(g: pd.DataFrame, cands: np.ndarray) -> pd.DataFrame:
 
 
 def decode_scores(batches, idf: float, avgdl: float, k: int | None):
-    """One term's blocks (pandas batches) → (doc_id, score). With k:
-    block-max WAND — blocks are visited in descending block_max_score order
-    and skipped once the bounded top-k heap's floor exceeds the block's
-    bound; the heap is flushed ONCE at the end (per-batch flushes would
-    duplicate docs)."""
-    heap: list[tuple[float, int]] = []
+    """One term's blocks (pandas batches) → (doc_id, score). With k: exact
+    block-max WAND per batch — decode the fewest highest-bound blocks that
+    hold k postings, take θ = the k-th best score among them and the
+    running top-k, drop the blocks whose block_max_score is below θ (no
+    posting of theirs can enter the top-k), decode the rest in one call and
+    carry the top-k by (score desc, doc_id asc) to the next batch; it is
+    yielded once, at the end (per-batch yields would duplicate docs)."""
+
+    def scored(blocks):
+        d, t, l, _ = codecs.decode_blocks(blocks)
+        return d, scoring.bm25(t, l, avgdl, idf)
+
+    top = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
     for pdf in batches:
-        if k is not None:
-            pdf = pdf.sort_values("block_max_score", ascending=False)
-        out = []
-        for row in pdf.itertuples():  # loop over BLOCKS, not postings
-            if k is not None and len(heap) >= k and row.block_max_score < heap[0][0]:
-                continue  # block-max prune: bound can't beat current k-th
-            d, t, l = codecs.decode_block(row._asdict())
-            score = scoring.bm25(t, l, avgdl, idf)
-            if k is None:
-                out.append(pd.DataFrame({"doc_id": d, "score": score}))
-                continue
-            for s, doc in zip(score, d):
-                item = (float(s), -int(doc))
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        if out:
-            yield pd.concat(out, ignore_index=True)
-    if heap:
-        yield pd.DataFrame({
-            "doc_id": np.array([-x[1] for x in heap], dtype="int64"),
-            "score": np.array([x[0] for x in heap], dtype="float64"),
-        })
+        if k is None:
+            if len(pdf):
+                d, s = scored(pdf)
+                yield pd.DataFrame({"doc_id": d, "score": s})
+            continue
+        pdf = pdf.sort_values("block_max_score", ascending=False)
+        lead = int(np.searchsorted(np.cumsum(pdf["num_docs"].to_numpy()), k)) + 1
+        d, s = map(np.concatenate, zip(top, scored(pdf.iloc[:lead])))
+        rest = pdf.iloc[lead:]
+        if 0 < k <= s.size:
+            theta = np.partition(s, s.size - k)[s.size - k]
+            rest = rest[rest["block_max_score"].to_numpy() >= theta]
+        if len(rest):
+            d, s = map(np.concatenate, zip((d, s), scored(rest)))
+        best = np.lexsort((d, -s))[:k]
+        top = d[best], s[best]
+    if top[0].size:
+        yield pd.DataFrame({"doc_id": top[0], "score": top[1]})
 
 
 def decode_position_blocks(batches):
-    """Blocks (Arrow batches) → (term_id, doc_id, tf, dl, positions). The
-    per-doc position lists are ONE ListArray built from (offsets =
-    cumsum(tf), values = vectorized varint decode) — no Python list objects,
-    so stop-word phrases decode at memory speed."""
+    """Blocks (Arrow batches) → (term_id, doc_id, tf, dl, positions), one
+    decode per batch. The per-doc position lists are ONE ListArray built
+    from (offsets = cumsum(tf), values = vectorized varint decode) — no
+    Python list objects, so stop-word phrases decode at memory speed."""
     for rb in batches:
-        tids, docs, tfs_a, dls_a, vals = [], [], [], [], []
-        for blk in rb.to_pylist():
-            d, t, l = codecs.decode_block(blk)
-            vals.append(codecs.decode_positions(blk["positions"], t))
-            tids.append(np.full(len(d), blk["term_id"], dtype="int64"))
-            docs.append(d)
-            tfs_a.append(t)
-            dls_a.append(l)
-        if not docs:
+        if rb.num_rows == 0:
             continue
-        tf_all = np.concatenate(tfs_a)
-        offsets = np.concatenate(([0], np.cumsum(tf_all))).astype("int32")
-        positions = pa.ListArray.from_arrays(
-            pa.array(offsets), pa.array(np.concatenate(vals), pa.int64())
-        )
+        cols = rb.to_pydict()
+        d, t, l, n = codecs.decode_blocks(cols)
+        # positions restart per doc, so the blocks' bytes join as they are
+        vals = codecs.decode_positions(b"".join(cols["positions"]), t)
+        offsets = np.concatenate(([0], np.cumsum(t))).astype("int32")
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(np.concatenate(tids), pa.int64()),
-                pa.array(np.concatenate(docs), pa.int64()),
-                pa.array(tf_all.astype("int32"), pa.int32()),
-                pa.array(np.concatenate(dls_a).astype("int32"), pa.int32()),
-                positions,
+                pa.array(np.repeat(cols["term_id"], n), pa.int64()),
+                pa.array(d, pa.int64()),
+                pa.array(t.astype("int32"), pa.int32()),
+                pa.array(l.astype("int32"), pa.int32()),
+                pa.ListArray.from_arrays(pa.array(offsets), pa.array(vals, pa.int64())),
             ],
             names=["term_id", "doc_id", "tf", "dl", "positions"],
         )
 
 
 def _decode_group(g, lo, hi, idf, avgdl):
-    """Decode one term's blocks, keep docs in [lo, hi) → (doc_id, bm25)."""
-    dd, tt, ll = zip(*(codecs.decode_block(r._asdict()) for r in g.itertuples()))
-    d = np.concatenate(dd)
+    """Decode blocks, keep docs in [lo, hi) → (doc_id, bm25)."""
+    d, t, l, _ = codecs.decode_blocks(g)
     m = (d >= lo) & (d < hi)
-    return d[m], scoring.bm25(
-        np.concatenate(tt)[m], np.concatenate(ll)[m], avgdl, idf
-    )
+    return d[m], scoring.bm25(t[m], l[m], avgdl, idf)
 
 
 def _fold_topk(parts, key2_per_part, kk):
@@ -242,7 +232,7 @@ def score_range_or(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
             ad = np.concatenate([q[0] for q in parts])
             ac = np.concatenate([q[1] for q in parts])
             udq, inv = np.unique(ad, return_inverse=True)
-            if udq.size >= p.kk:
+            if 0 < p.kk <= udq.size:
                 sums = np.zeros(udq.size)
                 np.add.at(sums, inv, ac)
                 theta = float(np.partition(sums, udq.size - p.kk)[udq.size - p.kk])
@@ -315,25 +305,19 @@ def score_range_and(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
     return _fold_topk(parts, keys, p.kk)
 
 
-def _chain_keys(g, lo, hi, cand, off, dl_out=None):
-    """Decode a clause term's blocks in [lo, hi) (and, given candidates,
-    only candidate docs) → packed (doc, position - off) keys. dl_out
-    collects (rel doc, dl) pairs when given."""
-    parts = []
-    for row in g.itertuples():
-        d, t, l = codecs.decode_block(row._asdict())
-        m = (d >= lo) & (d < hi)
-        if cand is not None:
-            m &= _member(cand, d)
-        if not m.any():
-            continue
-        if dl_out is not None:
-            dl_out.append(((d - lo)[m], l[m]))
-        vals = codecs.decode_positions(row.positions, t)
-        pm = np.repeat(m, t)
-        rel = np.repeat(d - lo, t)[pm]
-        parts.append(rel * _PC_DOC_MULT + (vals[pm] - off + _PC_POS_BIAS))
-    return parts
+def _chain_keys(g, lo, hi, cand, off):
+    """Decode a clause's blocks in one call, keep docs in [lo, hi) (and,
+    given candidates, only candidate docs) → packed (doc, position - off)
+    keys, plus the kept docs' (doc - lo, dl)."""
+    d, t, l, _ = codecs.decode_blocks(g)
+    m = (d >= lo) & (d < hi)
+    if cand is not None:
+        m &= _member(cand, d)
+    vals = codecs.decode_positions(b"".join(g["positions"]), t)
+    pm = np.repeat(m, t)
+    rel = d - lo
+    keys = np.repeat(rel, t)[pm] * _PC_DOC_MULT + (vals[pm] - off + _PC_POS_BIAS)
+    return keys, rel[m], l[m]
 
 
 def chain_range(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -344,32 +328,23 @@ def chain_range(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
     DOC_MULT, POS_BIAS = _PC_DOC_MULT, _PC_POS_BIAS
     rng = int(pdf["rng"].iloc[0])
     lo, hi = rng * p.R, (rng + 1) * p.R
-    by_tid = {
-        (int(lyr), int(tid)): g
-        for (lyr, tid), g in pdf[pdf["role"] == 0].groupby(["lyr", "term_id"])
-    }
+    role = pdf["role"].to_numpy()
+    lyrs, tids_a = pdf["lyr"].to_numpy(), pdf["term_id"].to_numpy()
     running = None
-    dl_pairs = []  # exact dl, collected on the first clause
     for ci, (lyr, tids) in enumerate(p.clause_keys):
+        g = pdf[(role == 0) & (lyrs == lyr) & np.isin(tids_a, tids)]
         cand = None
         if running is not None:
             cand = lo + np.unique(running // DOC_MULT)
-        parts = []
-        for tid in tids:
-            g = by_tid.get((lyr, tid))
-            if g is None:
-                continue
-            if cand is not None:
-                g = _blocks_holding(g, cand)
-            parts += _chain_keys(
-                g, lo, hi, cand, p.clause_offs[ci],
-                dl_pairs if p.with_dl and ci == 0 else None,
-            )
-        if not parts:
+            g = _blocks_holding(g, cand)
+        keys, rel, dl = _chain_keys(g, lo, hi, cand, p.clause_offs[ci])
+        if ci == 0:
+            dl_pairs = rel, dl  # exact dl, from the first clause
+        if keys.size == 0:
             return p.empty
         # multi-term clauses (regex expansions, synonyms) can repeat
         # a (doc, position); unique also sorts for the intersect
-        keys = np.unique(np.concatenate(parts))
+        keys = np.unique(keys)
         running = keys if running is None else np.intersect1d(
             running, keys, assume_unique=True
         )
@@ -379,12 +354,8 @@ def chain_range(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
         # the variable-gap tail, same decode + candidate skipping; one
         # intersect per gap value, spans out
         cand = lo + np.unique(running // DOC_MULT)
-        parts = []
-        for _, g in pdf[pdf["role"] == 1].groupby("term_id"):
-            parts += _chain_keys(_blocks_holding(g, cand), lo, hi, cand, 0)
-        if not parts:
-            return p.empty
-        tail_keys = np.unique(np.concatenate(parts))
+        tail = _blocks_holding(pdf[role == 1], cand)
+        tail_keys = np.unique(_chain_keys(tail, lo, hi, cand, 0)[0])
         outs = []
         for s in p.shifts:
             hit = np.intersect1d(running, tail_keys - s, assume_unique=True)
@@ -405,11 +376,9 @@ def chain_range(p: SimpleNamespace, pdf: pd.DataFrame) -> pd.DataFrame:
         "positions": np.split(start.astype("int64"), idx[1:]),
     }
     if p.with_dl:
-        dd = np.concatenate([x[0] for x in dl_pairs])
-        ll = np.concatenate([x[1] for x in dl_pairs])
+        dd, ll = dl_pairs
         srt = np.argsort(dd)
-        dd, ll = dd[srt], ll[srt]
-        out["dl"] = ll[np.searchsorted(dd, ud)].astype("int32")
+        out["dl"] = ll[srt][np.searchsorted(dd[srt], ud)].astype("int32")
     return pd.DataFrame(out)
 
 
@@ -749,7 +718,8 @@ class Corpus:
         kernel = partial(
             decode_scores, idf=scoring.idf(self.n_docs, df), avgdl=self.avgdl, k=k
         )
-        cols = ["first_doc_id", "doc_gaps", "tfs", "dls", "block_max_score"]
+        cols = ["first_doc_id", "num_docs", "doc_gaps", "tfs", "dls",
+                "block_max_score"]
         local = self._driver_blocks([tid], cols, df)
         if local is not None:
             return self._scored_local(

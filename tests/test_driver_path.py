@@ -381,6 +381,40 @@ def test_vocabulary_miss_runs_no_job(spark, pair):
             assert (got, jobs) == ([], 0)
 
 
+def test_k0_is_the_empty_top_k(pair):
+    """k=0 asks for no rows: every scored shape returns none on both paths
+    (a one-term top-k and the multi-term OR's θ update must not index the
+    k-th best of nothing)."""
+    local, remote, _, _ = pair
+    for c in (local, remote):
+        for action in (
+            lambda: c.search_or(["the"], k=0),
+            lambda: c.search_or(["the", "w0001"], k=0),
+            lambda: c.score_or(["the"], k=0),
+            lambda: c.score_or(["the", "w0001"], k=0),
+            lambda: c.search("the", k=0),
+            lambda: c.search("the w0001", k=0),
+            lambda: c.search("+the +w0001", k=0),
+            lambda: c.search('"the w0001"', k=0),
+        ):
+            assert action().collect() == []
+
+
+def test_spark_top_k_over_multi_batch_partitions(spark, pair):
+    """With 3-block Arrow batches, one term's blocks reach decode_scores in
+    several batches per partition; the top-k carried across them is the
+    oracle's."""
+    _, remote, oi, _ = pair
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for k in (1, 7, 200):
+            assert rows(remote.search_or(["the"], k)) == orc.topk_or(oi, ["the"], k)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_search_cache_does_not_persist_driver_results(spark, pair, picks):
     """The search cache persists only Spark-path frames: persist() on a
     LocalRelation would cost a job, and a hit must cost none either."""
