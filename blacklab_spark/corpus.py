@@ -21,16 +21,16 @@ with DataFrame plans:
                         compiles this to TakeOrderedAndProject (bounded
                         per-partition heaps + driver merge, no global sort)
   * driver path       → the same block kernels run in the driver over a
-                        pyarrow read and return a sorted LocalRelation (no
-                        Spark job for top-k or empty results), chosen at plan
-                        time when the postings a query reads (summed df of
-                        every term whose blocks it reads, for every shape)
-                        are ≤ _DRIVER_MAX_POSTINGS and the row groups to
-                        read fit in one task's split
-                        (≤ spark.sql.files.maxPartitionBytes, from the footers);
-                        a hits_page over driver-path hits, ungrouped or grouped
-                        by a span column, computes its counts, groups, window
-                        and KWIC (docs read the same way)
+                        pyarrow read, chosen at plan time when the postings
+                        a query reads (summed df of every term whose blocks
+                        it reads, for every shape) are ≤ _DRIVER_MAX_POSTINGS
+                        and the row groups to read fit in one task's split
+                        (≤ spark.sql.files.maxPartitionBytes, from the
+                        footers). Steps pass Arrow tables; what the caller
+                        gets is a LocalFrame, which answers count/collect/
+                        limit from its table. hits_page over such hits,
+                        ungrouped or grouped by a span column, computes its
+                        counts, groups, window and KWIC the same way
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -44,16 +44,19 @@ import json
 import math
 import os
 from dataclasses import dataclass
-from functools import partial
+from functools import cache, partial
 from types import SimpleNamespace
 from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from blacklab_spark import codecs, scoring
 from blacklab_spark.build import IndexPaths
@@ -77,18 +80,77 @@ _PC_DOC_MULT = np.int64(1) << 33
 _PC_POS_BIAS = np.int64(1) << 32
 
 
-def local_frame(spark: SparkSession, schema: str, data=None) -> DataFrame:
-    """Driver-built rows (pandas or Arrow; empty when None) as a
-    LocalRelation: collect() and limit() on it run no Spark job, unlike
-    createDataFrame([]), whose LogicalRDD costs a job per action."""
-    st = T.DataType.fromDDL(schema)
-    if data is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
+@cache  # fromDDL is a JVM call: one per DDL string
+def _arrow_schema(schema: str) -> pa.Schema:
+    return to_arrow_schema(T.DataType.fromDDL(schema))
 
-        data = to_arrow_schema(st).empty_table()
-    elif isinstance(data, pd.DataFrame):
-        data = pa.Table.from_pandas(data, preserve_index=False)
-    return spark.createDataFrame(data, st)
+
+def driver_table(schema: str, data=None) -> pa.Table:
+    """Driver-built rows (pandas or Arrow; empty when None) as an Arrow
+    table with the Arrow types of the DDL `schema`."""
+    target = _arrow_schema(schema)
+    if data is None:
+        return target.empty_table()
+    if isinstance(data, pd.DataFrame):
+        return pa.Table.from_pandas(data, schema=target, preserve_index=False)
+    return data.select(target.names).cast(target)
+
+
+class LocalFrame(ClassicDataFrame):
+    """A driver result: its Arrow table plus ONE JVM relation over the same
+    rows (by default createDataFrame of the table). count, collect,
+    isLocal, schema/columns and limit(n), hence take/first/head, read the
+    table: no Spark job, no Py4J call. All else runs on the relation."""
+
+    def __new__(cls, *args, **kwargs):  # DataFrame's calls __init__(jdf, session)
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table, jdf=None):
+        schema = from_arrow_schema(table.schema)
+        if jdf is None:
+            jdf = spark.createDataFrame(table, schema)._jdf
+        super().__init__(jdf, spark)
+        self.table = table
+        self.__dict__["schema"] = schema  # fills the cached property
+
+    def count(self) -> int:
+        return self.table.num_rows
+
+    def collect(self) -> list[Row]:
+        row = Row(*self.table.column_names)
+        return [row(*v) for v in zip(*(c.to_pylist() for c in self.table.columns))]
+
+    def isLocal(self) -> bool:
+        return True
+
+    def limit(self, num: int) -> "LocalFrame":
+        if num >= self.table.num_rows:
+            return self
+        return LocalFrame(self.sparkSession, self.table.slice(0, num), self._jdf.limit(num))
+
+
+def local_frame(spark: SparkSession, schema: str, data=None) -> LocalFrame:
+    """Driver-built rows (pandas or Arrow; empty when None) as a LocalFrame:
+    one createDataFrame relation, unlike createDataFrame([]), whose
+    LogicalRDD costs a job per action."""
+    return LocalFrame(spark, driver_table(schema, data))
+
+
+def as_frame(spark: SparkSession, out) -> DataFrame:
+    """A step's result for the caller: an Arrow table becomes a LocalFrame."""
+    return LocalFrame(spark, out) if isinstance(out, pa.Table) else out
+
+
+def explode_positions(table: pa.Table, width: int) -> pa.Table:
+    """(doc_id, positions) rows → one (doc_id, start, start + width) row per
+    position, in order: the Spark path's explode, vectorized in the driver."""
+    pos = table["positions"]
+    start = pc.list_flatten(pos)
+    return pa.table({
+        "doc_id": pc.take(table["doc_id"], pc.list_parent_indices(pos)),
+        "start": start.cast(pa.int32()),
+        "end": pc.add(start, width).cast(pa.int32()),
+    })
 
 
 # ------------------------------------------------------------- kernels --
@@ -397,9 +459,8 @@ def _per_range(blocks: pd.DataFrame, R: int, kernel) -> list[pd.DataFrame]:
 
 def _top_k(scores: DataFrame, k: int) -> DataFrame:
     """Top-k by (score desc, doc_id asc). A driver-path frame is already in
-    that order, so it takes only limit(k), which folds into its
-    LocalRelation (no Spark job)."""
-    if scores.isLocal():
+    that order, so it takes only its own limit(k) (no Spark job)."""
+    if isinstance(scores, LocalFrame):
         return scores.limit(k)
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -702,7 +763,7 @@ class Corpus:
         return cached
 
     def _scored_local(self, scores: pd.DataFrame, k: int | None = None) -> DataFrame:
-        """Driver-path scores as a LocalRelation in top-k order (score desc,
+        """Driver-path scores as a LocalFrame in top-k order (score desc,
         doc_id asc), cut at k."""
         scores = scores.sort_values(["score", "doc_id"], ascending=[False, True])
         return local_frame(self.spark, _SCORES, scores.iloc[:k])
@@ -728,17 +789,18 @@ class Corpus:
         blocks = self.postings.filter(F.col("term_id") == tid).select(*cols)
         return blocks.mapInPandas(kernel, schema=_SCORES)
 
-    def _decoded_positions(self, tinfo: pd.DataFrame) -> DataFrame:
-        """postings → (term_id, doc_id, tf, dl, positions) for phrase
-        matching, through decode_position_blocks."""
+    def _decoded_positions(self, tinfo: pd.DataFrame) -> pa.Table | DataFrame:
+        """postings → (term_id, doc_id, tf, dl, positions) through
+        decode_position_blocks: an Arrow table on the driver path."""
+        if tinfo.empty:
+            return driver_table(_DECODED_POS_SCHEMA)
         term_ids = [int(t) for t in tinfo["term_id"]]
         cols = ["term_id", "first_doc_id", "doc_gaps", "tfs", "dls", "positions"]
         local = self._driver_blocks(term_ids, cols, int(tinfo["df"].sum()))
         if local is not None:
             out = list(decode_position_blocks(local.to_batches()))
-            return local_frame(
-                self.spark, _DECODED_POS_SCHEMA,
-                pa.Table.from_batches(out) if out else None,
+            return driver_table(
+                _DECODED_POS_SCHEMA, pa.Table.from_batches(out) if out else None
             )
         blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(*cols)
         return blocks.mapInArrow(decode_position_blocks, schema=_DECODED_POS_SCHEMA)
@@ -747,12 +809,10 @@ class Corpus:
     def term_positions(self, term: str) -> DataFrame:
         """(doc_id, tf, positions array<long>) for one term from the
         positional postings (positions ascending per doc)."""
-        tinfo = self.lookup_terms([term])
-        if tinfo.empty:
-            return local_frame(
-                self.spark, "doc_id long, tf int, positions array<long>"
-            )
-        return self._decoded_positions(tinfo).select("doc_id", "tf", "positions")
+        pos = self._decoded_positions(self.lookup_terms([term]))
+        if isinstance(pos, pa.Table):
+            return local_frame(self.spark, "doc_id long, tf int, positions array<long>", pos)
+        return pos.select("doc_id", "tf", "positions")
 
     def spans_term(self, term: str) -> DataFrame:
         """Postings-backed BLSpanTermQuery leaf: every occurrence of `term`
@@ -767,18 +827,19 @@ class Corpus:
         the BLSpanMultiTermQueryWrapper expansion leaf (one regex/wildcard
         atom expands to many terms; they share a single decode pass).
 
-        r7: the EXACT output size is known at plan time — sum of the terms'
-        collection frequencies — so when it fits the broadcast cap the
-        result carries a broadcast hint. Downstream hit→docs joins
+        Driver-path positions explode in the driver into a LocalFrame. On
+        Spark the EXACT output size is known at plan time — sum of the
+        terms' collection frequencies — so when it fits the broadcast cap
+        the result carries a broadcast hint. Downstream hit→docs joins
         (collocations, KWIC, context ops) then broadcast the hits side
         without the runtime size probe (guide §3.1: the optimizer cannot
         size a Python-decoded side; we can)."""
         tinfo = self.lookup_terms(terms)
-        if tinfo.empty:
-            return local_frame(self.spark, _SPANS)
+        pos = self._decoded_positions(tinfo)
+        if isinstance(pos, pa.Table):
+            return local_frame(self.spark, _SPANS, explode_positions(pos, 1))
         out = (
-            self._decoded_positions(tinfo)
-            .select("doc_id", F.explode("positions").alias("p"))
+            pos.select("doc_id", F.explode("positions").alias("p"))
             .select(
                 "doc_id",
                 F.col("p").cast("int").alias("start"),
@@ -823,14 +884,17 @@ class Corpus:
         appends a VARIABLE-finite-gap clause inside the SAME kernel pass —
         one extra intersect per gap value — and switches the output to spans
         (doc_id, start, end): the `run []{m,n} clause` shape without ever
-        materializing the prefix outside the partition."""
-        if vargap_tail is not None:
-            out_schema = _SPANS
-        else:
-            out_schema = (
-                "doc_id long, positions array<long>"
-                + (", dl int" if with_dl else "")
-            )
+        materializing the prefix outside the partition.
+
+        Engine steps call _positions_chain: an Arrow table on the driver path."""
+        return as_frame(self.spark, self._positions_chain(clauses, with_dl, vargap_tail))
+
+    def _positions_chain(
+        self, clauses: list[tuple], with_dl: bool, vargap_tail: tuple | None
+    ) -> pa.Table | DataFrame:
+        out_schema = _SPANS if vargap_tail is not None else (
+            "doc_id long, positions array<long>" + (", dl int" if with_dl else "")
+        )
         layers: list[Corpus] = [self]
 
         def _layer_idx(c: "Corpus" | None) -> int:
@@ -855,7 +919,7 @@ class Corpus:
             ti = layers[lyr].lookup_terms(terms)
             tids = [int(t) for t in ti["term_id"]]
             if not tids:  # a vocab-miss clause empties the whole chain
-                return local_frame(self.spark, out_schema)
+                return driver_table(out_schema)
             infos.append((int(ti["df"].sum()), lyr, tids, int(off)))
             tids_by_layer.setdefault(lyr, set()).update(tids)
             dfs.update(((lyr, t), int(d)) for t, d in zip(tids, ti["df"]))
@@ -871,7 +935,7 @@ class Corpus:
             tti = layers[tail_lyr].lookup_terms(t_terms)
             tail_tids = [int(t) for t in tti["term_id"]]
             if not tail_tids:
-                return local_frame(self.spark, out_schema)
+                return driver_table(out_schema)
             dfs.update(((tail_lyr, t), int(d)) for t, d in zip(tail_tids, tti["df"]))
             shifts = [t_width + g for g in range(t_gmin, t_gmax + 1)]
         n_ranges = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -881,18 +945,7 @@ class Corpus:
                 "positions_chain: docs-per-range too large for key packing; "
                 "raise spark.sql.shuffle.partitions"
             )
-        if vargap_tail is not None:
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "start": pd.Series(dtype="int32"),
-                "end": pd.Series(dtype="int32"),
-            })
-        else:
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "positions": pd.Series(dtype="object"),
-                **({"dl": pd.Series(dtype="int32")} if with_dl else {}),
-            })
+        empty = driver_table(out_schema).to_pandas()
         # plain data only: the kernel must not capture vargap_tail (it may
         # hold a Corpus → SparkContext)
         p = SimpleNamespace(
@@ -922,7 +975,7 @@ class Corpus:
                 for t, (role, lyr, _) in zip(local, reads)
             ], ignore_index=True)
             parts = _per_range(blocks, R, kernel)
-            return local_frame(self.spark, out_schema, pd.concat([empty, *parts]))
+            return driver_table(out_schema, pd.concat([empty, *parts]))
 
         def _blocks(role, lyr, tids):
             return layers[lyr].postings.filter(F.col("term_id").isin(tids)).select(
@@ -1160,16 +1213,12 @@ class Corpus:
         # phrase terms' compressed blocks, partition-local rarest-first
         # intersect with candidate block skipping; replaces the per-slot
         # array_intersect JOINs (which shuffled decoded position arrays)
-        chain = self.positions_chain(
-            [([t], i) for i, t in enumerate(terms)], with_dl=True
-        )
-        if chain.isLocal():  # driver path: the same BM25 in numpy, no job
-            rows = chain.collect()
-            tf = [len(r["positions"]) for r in rows]
-            score = scoring.bm25(tf, [r["dl"] for r in rows], avgdl, idf_sum)
+        chain = self._positions_chain([([t], i) for i, t in enumerate(terms)], True, None)
+        if isinstance(chain, pa.Table):  # driver path: the same BM25 in numpy
+            tf = pc.list_value_length(chain["positions"]).to_numpy()
+            score = scoring.bm25(tf, chain["dl"].to_numpy(), avgdl, idf_sum)
             return self._scored_local(pd.DataFrame({
-                "doc_id": np.array([r["doc_id"] for r in rows], dtype="int64"),
-                "score": score,
+                "doc_id": chain["doc_id"].to_numpy(), "score": score,
             }))
         ptf = chain.select("doc_id", "dl", F.size("positions").alias("tf"))
         # closed-form BM25 expression, op-ordered to match scoring.bm25 bitwise
@@ -1284,7 +1333,7 @@ class Corpus:
         hits_df = self.find_cql(query)
         if (
             sort is None and group_by in (None, *SPAN_COLS)
-            and hits_df.isLocal() and hits_df.columns == SPAN_COLS
+            and isinstance(hits_df, LocalFrame) and hits_df.columns == SPAN_COLS
         ):
             return self._local_hits_page(
                 hits_df, group_by, first, number, context, max_process, max_count
@@ -1294,26 +1343,26 @@ class Corpus:
             if max_process is not None else hits_df
         )
         if max_process is not None:
-            pc = G.capped_count(hits_df, max_process).select(
+            n_proc = G.capped_count(hits_df, max_process).select(
                 F.col("n_hits").alias("n_processed"),
                 F.col("is_lower_bound").alias("processed_is_estimate"),
             )
         else:
-            pc = hits_df.agg(
+            n_proc = hits_df.agg(
                 F.count("*").alias("n_processed"),
                 F.lit(0).alias("processed_is_estimate"),
             )
         if max_count is not None:
-            cc = G.capped_count(hits_df, max_count).select(
+            n_count = G.capped_count(hits_df, max_count).select(
                 F.col("n_hits").alias("n_counted"),
                 F.col("is_lower_bound").alias("count_is_lower_bound"),
             )
         else:
-            cc = hits_df.agg(
+            n_count = hits_df.agg(
                 F.count("*").alias("n_counted"),
                 F.lit(0).alias("count_is_lower_bound"),
             )
-        summary = pc.crossJoin(cc)
+        summary = n_proc.crossJoin(n_count)
         groups = None
         if group_by is not None:
             groups = processed.groupBy(group_by).agg(
@@ -1332,13 +1381,14 @@ class Corpus:
     ) -> "HitsPage":
         """hits_page over driver-path hits: the same window, groups (by a
         span column), KWIC and summary computed in the driver, each a
-        LocalRelation (no Spark job). KWIC reads the page's docs through
-        pyarrow; when those row groups exceed one task's split it joins the
-        docs table on Spark instead."""
+        LocalFrame (no Spark job); the window's relation is the hits' own,
+        windowed in the JVM. KWIC reads the page's docs through pyarrow; when
+        those row groups exceed one task's split it joins the docs table on
+        Spark instead."""
         from blacklab_spark.operators import grouping as G
         from blacklab_spark.operators.spans import SPAN_COLS
 
-        hits = pd.DataFrame(hits_df.collect(), columns=SPAN_COLS, dtype="int64")
+        hits = hits_df.table.to_pandas()
         n = len(hits)
         processed = hits.iloc[:max_process]
 
@@ -1360,11 +1410,15 @@ class Corpus:
             )
         page = processed.sort_values(SPAN_COLS, kind="stable")
         page = page.iloc[first:first + number].reset_index(drop=True)
-        if context is None:
-            return HitsPage(local_frame(self.spark, _SPANS, page), groups, summary)
-        docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
+        docs = None
+        if context is not None:
+            docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
         if docs is None:
-            kwic = G.kwic_spans(local_frame(self.spark, _SPANS, page), self.docs, context)
+            jvm = G.hits_window(hits_df.limit(len(processed)), SPAN_COLS, first, number)
+            window = LocalFrame(self.spark, driver_table(_SPANS, page), jvm._jdf)
+            if context is None:
+                return HitsPage(window, groups, summary)
+            kwic = G.kwic_spans(window, self.docs, context)
             return HitsPage(kwic.orderBy(*SPAN_COLS), groups, summary)
         toks = dict(zip(docs["doc_id"].to_pylist(), docs["tokens"].to_pylist()))
         rows = [(toks[d], s, e) for d, s, e in page.itertuples(index=False)]

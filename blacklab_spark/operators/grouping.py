@@ -99,9 +99,13 @@ def _hits_for_docs_join(h: DataFrame) -> DataFrame:
     if cap <= 0:
         return h
     try:
-        # a producer that KNOWS its output size (spans_terms: sum of cf)
-        # already attached a broadcast hint — skip the runtime probe job
-        if "ResolvedHint" in h._jdf.queryExecution().analyzed().toString():
+        # driver-path hits (a LocalRelation) are sized and in the driver; a
+        # producer that KNOWS its output size (spans_terms on Spark: sum of
+        # cf) attached a broadcast hint — no runtime probe job for either
+        qe = h._jdf.queryExecution()
+        if qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation":
+            return F.broadcast(h)
+        if "ResolvedHint" in qe.analyzed().toString():
             return h
     except Exception:
         pass

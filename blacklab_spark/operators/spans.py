@@ -26,14 +26,13 @@ per-document merge-join of sorted spans):
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blacklab_spark.operators.grouping import explode_tokens
 
 SPAN_COLS = ["doc_id", "start", "end"]
+SPAN_SCHEMA = "doc_id long, start int, end int"
 
 
 def span_term(docs: DataFrame, term: str) -> DataFrame:
@@ -236,17 +235,12 @@ def repetition(base: DataFrame, min_rep: int, max_rep: int) -> DataFrame:
 
 def spans_from_positions(pdf: DataFrame, width: int) -> DataFrame:
     """(doc_id, positions) → fixed-width spans (doc_id, start, end). Driver-
-    path positions (a plan that optimizes to a LocalRelation) are exploded
-    in the driver, so the spans are a LocalRelation too (no Spark job)."""
-    plan = pdf._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "LocalRelation":
-        from blacklab_spark.corpus import local_frame
+    path positions (a LocalFrame) explode in the driver, so the spans are a
+    LocalFrame too (no Spark job)."""
+    from blacklab_spark.corpus import LocalFrame, explode_positions, local_frame
 
-        pairs = [(r["doc_id"], p) for r in pdf.collect() for p in r["positions"]]
-        d, s = np.array(pairs, np.int64).reshape(-1, 2).T
-        return local_frame(pdf.sparkSession, "doc_id long, start int, end int", pd.DataFrame(
-            {"doc_id": d, "start": s.astype("int32"), "end": (s + width).astype("int32")}
-        ))
+    if isinstance(pdf, LocalFrame):
+        return local_frame(pdf.sparkSession, SPAN_SCHEMA, explode_positions(pdf.table, width))
     return pdf.select("doc_id", F.explode("positions").alias("s")).select(
         "doc_id",
         F.col("s").cast("int").alias("start"),
@@ -397,10 +391,10 @@ def fixed_span(docs: DataFrame, start: int, end: int) -> DataFrame:
 
 
 def no_hits(spark) -> DataFrame:
-    """The empty span set (SpanQueryNoHits), as a LocalRelation."""
+    """The empty span set (SpanQueryNoHits), as a LocalFrame."""
     from blacklab_spark.corpus import local_frame
 
-    return local_frame(spark, "doc_id long, start int, end int")
+    return local_frame(spark, SPAN_SCHEMA)
 
 
 def filter_by_docs(spans: DataFrame, docs: DataFrame, predicate) -> DataFrame:

@@ -58,9 +58,11 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blacklab_spark.corpus import LocalFrame, as_frame, explode_positions, local_frame
 from blacklab_spark.operators import spans as S
 from blacklab_spark.tokenizer import tokenize
 
@@ -1243,7 +1245,7 @@ class CqlCompiler:
 
     def _chain(
         self, run: list[tuple[str, list[str], int]], vargap_tail=None
-    ) -> DataFrame:
+    ) -> pa.Table | DataFrame:
         """A RUN of single-position clauses [(annot, terms, offset)] through
         the doc-range positions-chain kernel (Corpus.positions_chain): one
         shuffle of compressed blocks, intersected RAREST CLAUSE FIRST
@@ -1251,11 +1253,19 @@ class CqlCompiler:
         (doc_id, positions) in run-start coordinates, or spans with a
         `vargap_tail=(terms, width, gap_min, gap_max, layer_corpus)`. Layers
         may differ across the run: annotation layers are position-aligned by
-        construction (annotated.build_annotated_index)."""
-        return self._layer(run[0][0]).positions_chain(
-            [(terms, off, self._layer(a)) for a, terms, off in run],
-            vargap_tail=vargap_tail,
+        construction (annotated.build_annotated_index). The driver path
+        returns an Arrow table."""
+        return self._layer(run[0][0])._positions_chain(
+            [(terms, off, self._layer(a)) for a, terms, off in run], False, vargap_tail
         )
+
+    def _run_spans(self, run: list[tuple[str, list[str], int]], width: int) -> DataFrame:
+        """A fixed-gap run's spans; driver-path positions explode into one
+        LocalFrame, never shipped to the JVM themselves."""
+        chain = self._chain(run)
+        if isinstance(chain, pa.Table):
+            return local_frame(self.c.spark, S.SPAN_SCHEMA, explode_positions(chain, width))
+        return S.spans_from_positions(chain, width)
 
     def _compile_seq_concrete(self, units: list[Unit]) -> DataFrame:
         """Left-to-right sequence compile. Runs of single-position clauses
@@ -1281,9 +1291,7 @@ class CqlCompiler:
         def materialize() -> None:
             nonlocal acc, run, run_width, run_gap
             if run:
-                sp = S.spans_from_positions(
-                    self._chain(run), run_width
-                )
+                sp = self._run_spans(run, run_width)
                 if acc is None:
                     acc = sp
                 else:
@@ -1369,10 +1377,10 @@ class CqlCompiler:
                     # variable finite gap: the run and the tail clause in ONE
                     # kernel pass — one intersect per gap value, spans out
                     # (cross-layer runs included, r5)
-                    acc = self._chain(
+                    acc = as_frame(self.c.spark, self._chain(
                         run,
                         (terms, run_width, gmin, gmax, self._layer(annot)),
-                    )
+                    ))
                     run, run_width = [], 0
                     continue
             if pc is not None and run:
@@ -1481,7 +1489,7 @@ class PlanCache:
         from pyspark import StorageLevel
 
         df = build()
-        if not df.isLocal():  # a driver-path LocalRelation needs no cache job
+        if not isinstance(df, LocalFrame):  # a driver result needs no cache job
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
         evicted = []
         with self._lock:

@@ -428,3 +428,69 @@ def test_search_cache_does_not_persist_driver_results(spark, pair, picks):
         assert local._search_cache.hits == 1
     finally:
         local._search_cache = None
+
+
+def test_cql_count_runs_no_job_on_the_driver_path(spark, pair):
+    """count() of a driver-path CQL result is the table's row count: no
+    Spark job (a LocalRelation's count() runs two)."""
+    local, remote, _, texts = pair
+    q, expect = '"the" []{0,2} "to"', len(chain_hits(texts, ["the", "to"], 2))
+    assert run(spark, lambda: local.find_cql(q).count()) == (expect, 0)
+    got, jobs = run(spark, lambda: remote.find_cql(q).count())
+    assert got == expect and jobs > 0
+
+
+def driver_results(c):
+    page = c.hits_page('"a" "the"', group_by="doc_id", max_count=30, number=20)
+    return [
+        c.search_or(["the", "of", "is"], 10), c.search_and(["the", "w0002"], 10),
+        c.search_phrase(["a", "the"], 10), c.find_cql('"a" "the" "of"'),
+        c.find_cql('"the" []{0,2} "to"'), page.hits, page.groups, page.summary,
+    ]
+
+
+def test_reading_a_driver_result_sends_no_py4j_command(pair, monkeypatch):
+    """Once built, a driver result answers count() and collect() from its
+    Arrow table, without a round trip to the JVM."""
+    from py4j.clientserver import ClientServerConnection
+
+    results = driver_results(pair[0])
+    sent = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(
+        ClientServerConnection, "send_command",
+        lambda self, command, *a, **kw: sent.append(command) or send(self, command, *a, **kw),
+    )
+    for df in results:
+        assert df.count() == len(df.collect()) > 0
+    assert sent == []
+
+
+def test_one_relation_per_returned_frame(spark, pair, monkeypatch):
+    """Intermediates stay Arrow tables in the driver: a scored request, a
+    phrase and a 3-clause CQL sequence ship one relation each, a grouped
+    page three (its window is the hits' own relation, windowed in the JVM),
+    and a search-cache hit none."""
+    local = opened(spark, pair[0].paths.root)
+    made = []
+    create = type(spark).createDataFrame
+    monkeypatch.setattr(
+        type(spark), "createDataFrame",
+        lambda self, *a, **kw: made.append(1) or create(self, *a, **kw),
+    )
+
+    def relations(action):
+        made.clear()
+        action()
+        return len(made)
+
+    page = '"a" "the"'
+    assert relations(lambda: local.hits_page(page, group_by="doc_id", number=20)) == 3
+    assert relations(lambda: local.search_phrase(["a", "the"], 10)) == 1
+    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 1
+    assert relations(lambda: local.search_or(["the", "of", "is"], 10)) == 1
+    local.enable_search_cache()
+    assert relations(lambda: local.search_and(["the", "w0002"], 10)) == 1
+    assert relations(lambda: local.search_and(["the", "w0002"], 10)) == 0
+    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 1
+    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 0
