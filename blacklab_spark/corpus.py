@@ -28,9 +28,10 @@ with DataFrame plans:
                         (≤ spark.sql.files.maxPartitionBytes, from the
                         footers). Steps pass Arrow tables; what the caller
                         gets is a LocalFrame, which answers count/collect/
-                        limit from its table. hits_page over such hits,
-                        ungrouped or grouped by a span column, computes its
-                        counts, groups, window and KWIC the same way
+                        limit from its table and builds its JVM relation
+                        only on first JVM use. count_hits over such hits,
+                        and hits_page ungrouped or grouped by a span column,
+                        compute counts, groups, window and KWIC the same way
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -97,21 +98,31 @@ def driver_table(schema: str, data=None) -> pa.Table:
 
 
 class LocalFrame(ClassicDataFrame):
-    """A driver result: its Arrow table plus ONE JVM relation over the same
-    rows (by default createDataFrame of the table). count, collect,
-    isLocal, schema/columns and limit(n), hence take/first/head, read the
-    table: no Spark job, no Py4J call. All else runs on the relation."""
+    """A driver result: its Arrow table, plus a JVM relation over the same
+    rows (createDataFrame of the table) built on first JVM use: a
+    transformation, join, explain, persist, toPandas and the like. count,
+    collect, isLocal, schema/columns and limit(n), hence take/first/head,
+    read the table: no Spark job, no Py4J call, no relation."""
 
     def __new__(cls, *args, **kwargs):  # DataFrame's calls __init__(jdf, session)
         return object.__new__(cls)
 
-    def __init__(self, spark: SparkSession, table: pa.Table, jdf=None):
-        schema = from_arrow_schema(table.schema)
-        if jdf is None:
-            jdf = spark.createDataFrame(table, schema)._jdf
-        super().__init__(jdf, spark)
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        super().__init__(None, spark)
         self.table = table
-        self.__dict__["schema"] = schema  # fills the cached property
+        self.__dict__["schema"] = from_arrow_schema(table.schema)  # the cached property
+
+    @property
+    def _jdf(self):
+        if "_jdf" not in self.__dict__:  # racing threads: the first stored wins
+            jdf = self._session.createDataFrame(self.table, self.schema)._jdf
+            self.__dict__.setdefault("_jdf", jdf)
+        return self.__dict__["_jdf"]
+
+    @_jdf.setter
+    def _jdf(self, jdf):  # DataFrame.__init__ sets None: not built yet
+        if jdf is not None:
+            self.__dict__["_jdf"] = jdf
 
     def count(self) -> int:
         return self.table.num_rows
@@ -126,14 +137,20 @@ class LocalFrame(ClassicDataFrame):
     def limit(self, num: int) -> "LocalFrame":
         if num >= self.table.num_rows:
             return self
-        return LocalFrame(self.sparkSession, self.table.slice(0, num), self._jdf.limit(num))
+        return LocalFrame(self.sparkSession, self.table.slice(0, num))
 
 
 def local_frame(spark: SparkSession, schema: str, data=None) -> LocalFrame:
     """Driver-built rows (pandas or Arrow; empty when None) as a LocalFrame:
-    one createDataFrame relation, unlike createDataFrame([]), whose
-    LogicalRDD costs a job per action."""
+    its relation, when built, is one createDataFrame LocalRelation, unlike
+    createDataFrame([]), whose LogicalRDD costs a job per action."""
     return LocalFrame(spark, driver_table(schema, data))
+
+
+def _capped(n: int, cap: int | None) -> tuple[int, int]:
+    """maxHitsToCount over n hits: (min(n, cap), is_lower_bound); (n, 0)
+    uncapped."""
+    return (n, 0) if cap is None else (min(n, cap), int(n > cap))
 
 
 def as_frame(spark: SparkSession, out) -> DataFrame:
@@ -1290,6 +1307,9 @@ class Corpus:
         from blacklab_spark.operators.grouping import capped_count
 
         hits_df = self.find_cql(query)
+        if isinstance(hits_df, LocalFrame):
+            return local_frame(self.spark, "n_hits long, is_lower_bound int", pd.DataFrame(
+                [_capped(hits_df.count(), max_count)], columns=["n_hits", "is_lower_bound"]))
         if max_count is None:
             return hits_df.agg(
                 F.count("*").alias("n_hits"),
@@ -1381,24 +1401,19 @@ class Corpus:
     ) -> "HitsPage":
         """hits_page over driver-path hits: the same window, groups (by a
         span column), KWIC and summary computed in the driver, each a
-        LocalFrame (no Spark job); the window's relation is the hits' own,
-        windowed in the JVM. KWIC reads the page's docs through pyarrow; when
-        those row groups exceed one task's split it joins the docs table on
-        Spark instead."""
+        LocalFrame (no Spark job). KWIC reads the page's docs through pyarrow;
+        when those row groups exceed one task's split it joins the docs table
+        on Spark instead."""
         from blacklab_spark.operators import grouping as G
         from blacklab_spark.operators.spans import SPAN_COLS
 
         hits = hits_df.table.to_pandas()
         n = len(hits)
         processed = hits.iloc[:max_process]
-
-        def cap(c):
-            return (n, 0) if c is None else (min(n, c), int(n > c))
-
         summary = local_frame(
             self.spark, "n_processed long, processed_is_estimate int, "
             "n_counted long, count_is_lower_bound int",
-            pd.DataFrame([cap(max_process) + cap(max_count)], columns=[
+            pd.DataFrame([_capped(n, max_process) + _capped(n, max_count)], columns=[
                 "n_processed", "processed_is_estimate", "n_counted",
                 "count_is_lower_bound"]),
         )
@@ -1414,8 +1429,7 @@ class Corpus:
         if context is not None:
             docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
         if docs is None:
-            jvm = G.hits_window(hits_df.limit(len(processed)), SPAN_COLS, first, number)
-            window = LocalFrame(self.spark, driver_table(_SPANS, page), jvm._jdf)
+            window = local_frame(self.spark, _SPANS, page)
             if context is None:
                 return HitsPage(window, groups, summary)
             kwic = G.kwic_spans(window, self.docs, context)

@@ -1502,7 +1502,8 @@ class PlanCache:
                 _, old = self._od.popitem(last=False)
                 evicted.append(old)
         for old in evicted:
-            old.unpersist()
+            if not isinstance(old, LocalFrame):  # never persisted; may have no relation
+                old.unpersist()
         return df
 
 

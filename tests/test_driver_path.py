@@ -6,9 +6,13 @@ One index is opened twice: as is, every query here takes the driver path; with
 the bound set to -1 on the opened Corpus, the same queries take the Spark
 path. Both must return the oracle's answer bit for bit."""
 
+import sys
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from threading import Barrier
 
 import pytest
+from pyspark.sql import functions as F
 
 from blacklab_spark import oracle as orc
 from blacklab_spark.build import build_index
@@ -440,57 +444,187 @@ def test_cql_count_runs_no_job_on_the_driver_path(spark, pair):
     assert got == expect and jobs > 0
 
 
-def driver_results(c):
-    page = c.hits_page('"a" "the"', group_by="doc_id", max_count=30, number=20)
-    return [
-        c.search_or(["the", "of", "is"], 10), c.search_and(["the", "w0002"], 10),
-        c.search_phrase(["a", "the"], 10), c.find_cql('"a" "the" "of"'),
-        c.find_cql('"the" []{0,2} "to"'), page.hits, page.groups, page.summary,
-    ]
+def test_count_hits_runs_no_job_on_the_driver_path(spark, pair):
+    """count_hits over driver-path hits is the table's row count, capped
+    by the same rule: no Spark job, the Spark path's rows."""
+    local, remote, _, texts = pair
+    q, n = '"the" []{0,2} "to"', len(chain_hits(texts, ["the", "to"], 2))
+    for cap, expect in ((None, (n, 0)), (n // 2, (n // 2, 1)), (n, (n, 0))):
+        got = [run(spark, lambda: [tuple(r) for r in c.count_hits(q, cap).collect()])
+               for c in (local, remote)]
+        assert got[0] == (got[1][0], 0) and got[0][0] == [expect]
+        assert got[1][1] > 0
+    assert local.count_hits(q).dtypes == remote.count_hits(q).dtypes
 
 
-def test_reading_a_driver_result_sends_no_py4j_command(pair, monkeypatch):
-    """Once built, a driver result answers count() and collect() from its
-    Arrow table, without a round trip to the JVM."""
-    from py4j.clientserver import ClientServerConnection
-
-    results = driver_results(pair[0])
-    sent = []
-    send = ClientServerConnection.send_command
-    monkeypatch.setattr(
-        ClientServerConnection, "send_command",
-        lambda self, command, *a, **kw: sent.append(command) or send(self, command, *a, **kw),
-    )
-    for df in results:
-        assert df.count() == len(df.collect()) > 0
-    assert sent == []
-
-
-def test_one_relation_per_returned_frame(spark, pair, monkeypatch):
-    """Intermediates stay Arrow tables in the driver: a scored request, a
-    phrase and a 3-clause CQL sequence ship one relation each, a grouped
-    page three (its window is the hits' own relation, windowed in the JVM),
-    and a search-cache hit none."""
-    local = opened(spark, pair[0].paths.root)
+@pytest.fixture
+def relations(spark, monkeypatch):
+    """The relations shipped to the JVM (createDataFrame calls) so far."""
     made = []
     create = type(spark).createDataFrame
     monkeypatch.setattr(
         type(spark), "createDataFrame",
         lambda self, *a, **kw: made.append(1) or create(self, *a, **kw),
     )
+    return made
 
-    def relations(action):
-        made.clear()
-        action()
-        return len(made)
 
-    page = '"a" "the"'
-    assert relations(lambda: local.hits_page(page, group_by="doc_id", number=20)) == 3
-    assert relations(lambda: local.search_phrase(["a", "the"], 10)) == 1
-    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 1
-    assert relations(lambda: local.search_or(["the", "of", "is"], 10)) == 1
+@pytest.fixture
+def commands(monkeypatch):
+    """The Py4J commands sent so far."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(
+        ClientServerConnection, "send_command",
+        lambda self, command, *a, **kw: sent.append(command) or send(self, command, *a, **kw),
+    )
+    return sent
+
+
+def driver_results(c):
+    """A driver-path result of every request shape, by name."""
+    page = c.hits_page('"a" "the"', group_by="doc_id", max_count=30, number=20)
+    return {
+        "or": c.search_or(["the", "of", "is"], 10),
+        "and": c.search_and(["the", "w0002"], 10),
+        "phrase": c.search_phrase(["a", "the"], 10),
+        "seq3": c.find_cql('"a" "the" "of"'),
+        "gap": c.find_cql('"the" []{0,2} "to"'),
+        "count": c.count_hits('"the" []{0,2} "to"', max_count=30),
+        "page": page.hits, "groups": page.groups, "summary": page.summary,
+        "kwic": c.hits_page('"a" "the"', context=2, number=5).hits,
+    }
+
+
+def test_reading_a_driver_result_sends_no_py4j_command(pair, relations, commands):
+    """A driver result answers count() and collect() from its Arrow table,
+    without a round trip to the JVM, and building it shipped no relation."""
+    results = driver_results(pair[0])
+    commands.clear()
+    for df in results.values():
+        assert df.count() == len(df.collect()) > 0
+    assert commands == [] and relations == []
+
+
+def test_no_relation_until_the_jvm_is_needed(spark, pair, relations):
+    """A driver-path request, from the call through collect(), ships no
+    relation to the JVM: not a scored request, a phrase, a 3-clause CQL
+    sequence, a count or a page (grouped, or with context), and not a
+    search-cache hit of one."""
+    local = opened(spark, pair[0].paths.root)
+
+    def shipped(frames):
+        relations.clear()
+        for df in frames():
+            df.collect()
+        return len(relations)
+
+    def page(**kw):
+        p = local.hits_page('"a" "the"', number=20, **kw)
+        return [p.hits, p.summary] + ([p.groups] if p.groups is not None else [])
+
+    for frames in (
+        lambda: page(group_by="doc_id"),
+        lambda: page(context=2),
+        lambda: [local.search_phrase(["a", "the"], 10)],
+        lambda: [local.find_cql('"a" "the" "of"')],
+        lambda: [local.search_or(["the", "of", "is"], 10)],
+        lambda: [local.count_hits('"a" "the" "of"', max_count=3)],
+    ):
+        assert shipped(frames) == 0
     local.enable_search_cache()
-    assert relations(lambda: local.search_and(["the", "w0002"], 10)) == 1
-    assert relations(lambda: local.search_and(["the", "w0002"], 10)) == 0
-    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 1
-    assert relations(lambda: local.find_cql('"a" "the" "of"')) == 0
+    for _ in range(2):  # a miss, then a hit
+        assert shipped(lambda: [local.search_and(["the", "w0002"], 10)]) == 0
+        assert shipped(lambda: [local.find_cql('"a" "the" "of"')]) == 0
+    assert local._search_cache.hits == 2
+
+
+def test_grouped_page_over_a_cache_hit_builds_no_relation(spark, pair, relations):
+    """hits_page over a search-cache hit of its hits: the page, groups and
+    summary come from the cached table, with no relation and no job."""
+    local = opened(spark, pair[0].paths.root)
+    local.enable_search_cache()
+
+    def page():
+        p = local.hits_page('"a" "the"', group_by="doc_id", max_count=30, number=20)
+        return [[tuple(r) for r in df.collect()] for df in (p.hits, p.groups, p.summary)]
+
+    first = page()
+    assert local._search_cache.misses == 1
+    relations.clear()
+    assert run(spark, page) == (first, 0)
+    assert local._search_cache.hits == 1 and relations == []
+
+
+def test_a_transformation_builds_one_relation(spark, pair, relations):
+    """The first JVM use of a driver result builds its one relation, which
+    later transformations reuse: filter, a join with docs and heavy_colloc's
+    selectExpr each give the rows the table implies."""
+    local = pair[0]
+    dl = {r["doc_id"]: r["dl"] for r in local.doc_lengths().collect()}
+    for name, df in driver_results(local).items():
+        want = sorted(tuple(r) for r in df.collect())
+        relations.clear()
+        first = df.columns[0]
+        assert sorted(tuple(r) for r in df.filter(F.col(first).isNotNull()).collect()) == want
+        assert len(relations) == 1, name
+        if "doc_id" in df.columns:
+            joined = df.join(local.docs.select("doc_id", "dl"), "doc_id")
+            assert sorted(tuple(r) for r in joined.collect()) == sorted(
+                (r[0], *r[1:], dl[r[0]]) for r in want), name
+        if "start" in df.columns:
+            hits = df.selectExpr("doc_id", "start as pos")
+            assert sorted(tuple(r) for r in hits.collect()) == sorted(
+                r[:2] for r in want), name
+        assert len(relations) == 1, name
+
+
+def test_threads_share_one_cached_local_frame(spark, pair):
+    """Four threads read one search-cached LocalFrame at once: collect()
+    from the table, then a filter's count on its relation, which one of
+    them builds first. All get the same answers."""
+    local = opened(spark, pair[0].paths.root)
+    local.enable_search_cache()
+    q = '"the" []{0,2} "to"'
+    cached = local.find_cql(q)
+    start = Barrier(4)
+
+    def client(_):
+        start.wait(timeout=60)
+        df = local.find_cql(q)
+        return df is cached, sorted(map(tuple, df.collect())), df.filter(F.col("start") > 0).count()
+
+    rows_ = sorted(map(tuple, cached.collect()))
+    expect = (True, rows_, sum(1 for r in rows_ if r[1] > 0))
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            got = [f.result(timeout=300) for f in [pool.submit(client, i) for i in range(4)]]
+    finally:
+        sys.setswitchinterval(saved)
+    assert got == [expect] * 4
+
+
+def test_evicting_a_driver_result_sends_nothing_to_the_jvm(spark, pair, relations, commands):
+    """The search cache never persists a LocalFrame, so evicting one, or
+    dropping the loser of a build race, unpersists nothing: no relation is
+    built and no Py4J command is sent."""
+    from blacklab_spark.plans.cql import PlanCache
+
+    local = pair[0]
+    a, b, c = (local.find_cql(q) for q in ('"the"', '"a"', '"of"'))
+    cache = PlanCache(max_entries=1)
+    relations.clear()
+    commands.clear()
+    assert cache.get_or_build_key("idx", 0, "a", lambda: a) is a
+    assert cache.get_or_build_key("idx", 0, "b", lambda: b) is b  # evicts a
+
+    def race():  # another build of the same key lands first: c is dropped
+        cache.get_or_build_key("idx", 0, "b2", lambda: b)
+        return c
+
+    assert cache.get_or_build_key("idx", 0, "b2", race) is b
+    assert (relations, commands) == ([], [])

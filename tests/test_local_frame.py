@@ -1,8 +1,8 @@
 """LocalFrame, the driver path's result carrier: what it answers from its
 Arrow table (count, collect, limit/take/first, schema, columns) equals what
-its JVM relation answers for the same frame, for every schema the driver
-path returns, non-empty and empty. Transformations run on the relation, and
-a search-cache hit hands back the same LocalFrame."""
+its JVM relation, built on first JVM use, answers for the same frame, for
+every schema the driver path returns, non-empty and empty. Transformations
+run on the relation, and a search-cache hit hands back the same LocalFrame."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,7 +24,11 @@ def lc(spark, tmp_root):
 
 
 def driver_results(c):
-    """name → a driver-path result, one per schema, non-empty and empty."""
+    """name → a driver-path result, one per schema, non-empty and empty.
+    A page's window ("window", "kwic") is sliced in the driver, so its
+    relation is built from that slice: parity here checks the slice's
+    values and types, and test_driver_path's page tests check which hits
+    the slice holds against the Spark path."""
     the_quick = [(["the"], 0), (["quick"], 1)]
     missing = [(["zzzabsent"], 0), (["the"], 1)]
     page = c.hits_page('"the"', group_by="doc_id", context=2, number=3)
