@@ -28,10 +28,11 @@ with DataFrame plans:
                         (≤ spark.sql.files.maxPartitionBytes, from the
                         footers). Steps pass Arrow tables; what the caller
                         gets is a LocalFrame, which answers count/collect/
-                        limit from its table and builds its JVM relation
-                        only on first JVM use. count_hits over such hits,
-                        and hits_page ungrouped or grouped by a span column,
-                        compute counts, groups, window and KWIC the same way
+                        limit and plain projections from its table and
+                        builds its JVM relation only on first JVM use.
+                        count_hits, hits_page (ungrouped or grouped by a span
+                        column), and grouping's collocations and span KWIC
+                        over such hits and Corpus.docs run in the driver too
 
 Float64 parity contract (SURVEY.md §7.3/§7.4): per-term contributions are
 computed with the SAME numpy code as the oracle; multi-term sums fold in
@@ -44,6 +45,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 from dataclasses import dataclass
 from functools import cache, partial
 from types import SimpleNamespace
@@ -73,6 +75,7 @@ _DECODED_POS_SCHEMA = (
 _EMPTY_SCORES = pd.DataFrame(
     {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
 )
+_PLAIN = re.compile(r"([A-Za-z_]\w*)(?:\s+[Aa][Ss]\s+([A-Za-z_]\w*))?", re.ASCII)
 # key packing for the positions-chain kernel: within one doc-range
 # partition, key = (doc_id - lo) * 2^33 + (start + 2^32). Safe while
 # (n_docs / shuffle.partitions) < 2^30 — at 10^12 docs a cluster run
@@ -101,8 +104,9 @@ class LocalFrame(ClassicDataFrame):
     """A driver result: its Arrow table, plus a JVM relation over the same
     rows (createDataFrame of the table) built on first JVM use: a
     transformation, join, explain, persist, toPandas and the like. count,
-    collect, isLocal, schema/columns and limit(n), hence take/first/head,
-    read the table: no Spark job, no Py4J call, no relation."""
+    collect, isLocal, schema/columns, limit(n), hence take/first/head, and
+    a projection of plain column names (select; selectExpr, each optionally
+    `AS alias`) read the table: no Spark job, no Py4J call, no relation."""
 
     def __new__(cls, *args, **kwargs):  # DataFrame's calls __init__(jdf, session)
         return object.__new__(cls)
@@ -138,6 +142,24 @@ class LocalFrame(ClassicDataFrame):
         if num >= self.table.num_rows:
             return self
         return LocalFrame(self.sparkSession, self.table.slice(0, num))
+
+    def select(self, *cols) -> DataFrame:
+        return self._project(cols, False, super().select)
+
+    def selectExpr(self, *expr) -> DataFrame:
+        return self._project(expr, True, super().selectExpr)
+
+    def _project(self, args, renames: bool, on_jvm) -> DataFrame:
+        """The table's columns named in exact case (renamed by `AS alias`
+        when `renames`), or else on_jvm(*args): any other argument, and
+        output names Spark would see as duplicates, go to the relation."""
+        m = [isinstance(a, str) and _PLAIN.fullmatch(a) for a in args]
+        cols = self.table.column_names
+        out = [x[2] or x[1] for x in m if x and x[1] in cols and (renames or not x[2])]
+        if not args or len(out) < len(args) or len({o.lower() for o in out}) < len(out):
+            return on_jvm(*args)
+        table = self.table.select([x[1] for x in m]).rename_columns(out)
+        return LocalFrame(self.sparkSession, table)
 
 
 def local_frame(spark: SparkSession, schema: str, data=None) -> LocalFrame:
@@ -535,6 +557,8 @@ class Corpus:
         cached = getattr(self, "_docs_df", None)
         if cached is None:
             cached = self._docs_df = self.spark.read.parquet(self.paths.docs)
+            # grouping's driver paths read its rows; a derived frame cannot
+            cached.driver_rows = partial(self._driver_read, "docs")
         return cached
 
     @property
@@ -560,8 +584,8 @@ class Corpus:
 
         * term dictionary cached driver-side (lookup_terms / expand_pattern);
         * docs table (forward index) pinned in executor memory — its
-          consumers are JVM joins/slices (KWIC, collocations, constraints),
-          which read the columnar cache efficiently;
+          consumers are JVM joins/slices (KWIC, collocations, constraints
+          over Spark-path hits), which read the columnar cache efficiently;
         * postings warmed through once so the OS page cache holds the bytes,
           but deliberately NOT .persist()ed: the decode paths consume the
           postings via mapInArrow/mapInPandas, and a cached in-memory
@@ -606,10 +630,7 @@ class Corpus:
             # pays off for KWIC/collocation/constraint consumers (JVM joins
             # over the forward index); span-heavy serving at large corpora
             # skips it via the auto guard above
-            self._docs_df = self.spark.read.parquet(self.paths.docs).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            self._docs_df.count()
+            self.docs.persist(StorageLevel.MEMORY_AND_DISK).count()
         self._preloaded = True
         return self
 
@@ -1401,9 +1422,9 @@ class Corpus:
     ) -> "HitsPage":
         """hits_page over driver-path hits: the same window, groups (by a
         span column), KWIC and summary computed in the driver, each a
-        LocalFrame (no Spark job). KWIC reads the page's docs through pyarrow;
-        when those row groups exceed one task's split it joins the docs table
-        on Spark instead."""
+        LocalFrame (no Spark job). KWIC is grouping.kwic_spans over the docs,
+        which joins them on Spark when the page's docs' row groups exceed
+        one task's split."""
         from blacklab_spark.operators import grouping as G
         from blacklab_spark.operators.spans import SPAN_COLS
 
@@ -1424,25 +1445,12 @@ class Corpus:
                 processed.groupby(group_by).size().reset_index(name="n_hits"),
             )
         page = processed.sort_values(SPAN_COLS, kind="stable")
-        page = page.iloc[first:first + number].reset_index(drop=True)
-        docs = None
+        window = local_frame(self.spark, _SPANS, page.iloc[first:first + number])
         if context is not None:
-            docs = self._driver_read("docs", page["doc_id"], ["doc_id", "tokens"])
-        if docs is None:
-            window = local_frame(self.spark, _SPANS, page)
-            if context is None:
-                return HitsPage(window, groups, summary)
-            kwic = G.kwic_spans(window, self.docs, context)
-            return HitsPage(kwic.orderBy(*SPAN_COLS), groups, summary)
-        toks = dict(zip(docs["doc_id"].to_pylist(), docs["tokens"].to_pylist()))
-        rows = [(toks[d], s, e) for d, s, e in page.itertuples(index=False)]
-        page["left"] = [" ".join(t[max(0, s - context):s]) for t, s, _ in rows]
-        page["match"] = [" ".join(t[s:e]) for t, s, e in rows]
-        page["right"] = [" ".join(t[e:e + context]) for t, _, e in rows]
-        return HitsPage(
-            local_frame(self.spark, _SPANS + ", left string, match string, right string", page),
-            groups, summary,
-        )
+            window = G.kwic_spans(window, self.docs, context)
+            if not isinstance(window, LocalFrame):  # the docs read went to Spark
+                window = window.orderBy(*SPAN_COLS)
+        return HitsPage(window, groups, summary)
 
     def search(self, query: str, k: int = 10) -> DataFrame:
         """Parse a query string (mini-BCQL: terms / quoted phrase / /regex/)

@@ -24,12 +24,20 @@ Spark-first re-expressions of the reference's results machinery (SURVEY.md §2.4
 
 All operate on the docs table (doc_id, tokens, dl, metadata...) — the
 columnar forward index — so they scale as pure map+shuffle-agg plans.
+collocations_hits and kwic_spans over driver-path hits (a LocalFrame) and a
+Corpus's docs run in the driver: the hit docs' tokens read through pyarrow,
+the slices gathered with numpy (on Spark when those docs exceed one split).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from blacklab_spark.corpus import LocalFrame, local_frame
 
 
 def explode_tokens(docs: DataFrame) -> DataFrame:
@@ -114,15 +122,47 @@ def _hits_for_docs_join(h: DataFrame) -> DataFrame:
     return h
 
 
+def _driver_slices(h: DataFrame, docs: DataFrame, bounds):
+    """Driver-path hits over a Corpus's docs: (the hits whose doc is in docs,
+    in hit order; per (a, da, b, db) of bounds, a ListArray of each hit's
+    doc's tokens[a + da : b + db], a and b hit columns, clamped to the doc
+    as Spark's slice() clamps). None unless h is a LocalFrame and docs
+    carries driver_rows, or when the docs read goes to Spark."""
+    read = vars(docs).get("driver_rows") if isinstance(h, LocalFrame) else None
+    got = read and read(h.table["doc_id"].to_numpy(), ["doc_id", "tokens"])
+    if got is None:
+        return None
+    j = pc.index_in(h.table["doc_id"], value_set=got["doc_id"].combine_chunks())
+    hits, row = h.table.filter(j.is_valid()), j.drop_null().to_numpy()  # the inner join
+    toks = got["tokens"].combine_chunks()
+    dl = pc.list_value_length(toks).fill_null(0).to_numpy()
+    base, dl, flat, out = (np.cumsum(dl) - dl)[row], dl[row], toks.flatten(), []
+    for a, da, b, db in bounds:
+        lo = base + np.clip(hits[a].to_numpy().astype(np.int64) + da, 0, dl)
+        n = np.maximum(base + np.clip(hits[b].to_numpy().astype(np.int64) + db, 0, dl) - lo, 0)
+        ends = np.cumsum(n)
+        idx = np.arange(n.sum()) + np.repeat(lo - ends + n, n)
+        offsets = pa.array(np.append(0, ends), pa.int32())
+        out.append(pa.ListArray.from_arrays(offsets, flat.take(idx)))
+    return hits, out
+
+
 def collocations_hits(h: DataFrame, docs: DataFrame, window: int = 2) -> DataFrame:
     """Context-word frequencies within ±window tokens of each hit, given a
-    hits frame (doc_id, pos).
+    hits frame (doc_id, pos): term string, n long.
 
     Plan (SURVEY §2.4's prescription): join each hit to its doc's tokens and
     SLICE ±window around the hit, then explode the ≤2·window-token slices —
     bounded work per hit. The round-1 band join (hits × all doc tokens before
     the window filter) was per-doc quadratic for stop-word hits; this is not.
+    Driver-path hits over a Corpus's docs take the same slices in the driver
+    (_driver_slices) and count them with value_counts: a LocalFrame, no job.
     """
+    local = _driver_slices(h, docs, [("pos", -window, "pos", 0), ("pos", 1, "pos", 1 + window)])
+    if local is not None:
+        vc = pc.value_counts(pa.chunked_array([ctx.flatten() for ctx in local[1]]))
+        return local_frame(h.sparkSession, "term string, n long not null", pa.table(
+            {"term": vc.field("values"), "n": vc.field("counts")}))
     joined = _hits_for_docs_join(h).join(docs.select("doc_id", "tokens"), "doc_id")
     left_start = F.greatest(F.lit(1), F.col("pos") + 1 - window)
     left_len = F.col("pos") + 1 - left_start
@@ -173,13 +213,22 @@ def kwic_spans(h: DataFrame, docs: DataFrame, context: int = 2) -> DataFrame:
     /root/reference/engine/src/main/java/nl/inl/blacklab/search/results/
     hitresults/Kwics.java:27-46). Adds left/match/right; keeps every other
     hit column (captures etc.). Same physical shape as kwic_hits: one
-    doc-keyed join + built-in array slicing, no Python."""
+    doc-keyed join + built-in array slicing, no Python. Driver-path hits
+    over a Corpus's docs take the same slices in the driver (_driver_slices):
+    a LocalFrame in hit order, no job."""
+    keep = [c for c in h.columns if c != "doc_id"]
+    local = _driver_slices(h, docs, [("start", -context, "start", 0), ("start", 0, "end", 0),
+                                     ("end", 0, "end", context)])
+    if local is not None:
+        out = local[0].select(["doc_id", *keep])
+        for name, ctx in zip(("left", "match", "right"), local[1]):
+            out = out.append_column(name, pc.binary_join(ctx, " ").cast(pa.string()))
+        return LocalFrame(h.sparkSession, out)
     joined = _hits_for_docs_join(h).join(
         docs.select("doc_id", "tokens"), "doc_id"
     )
     left_start = F.greatest(F.lit(1), F.col("start") + 1 - context)
     left_len = F.col("start") + 1 - left_start
-    keep = [c for c in h.columns if c != "doc_id"]
     return joined.select(
         "doc_id",
         *keep,

@@ -8,17 +8,21 @@ path. Both must return the oracle's answer bit for bit."""
 
 import sys
 import uuid
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from threading import Barrier
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from blacklab_spark import oracle as orc
 from blacklab_spark.build import build_index
-from blacklab_spark.corpus import Corpus
+from blacklab_spark.corpus import Corpus, LocalFrame, local_frame
 from blacklab_spark.datagen import make_transcripts
 from blacklab_spark.incremental import add_to_index
+from blacklab_spark.operators import grouping as G
 from blacklab_spark.tokenizer import tokenize
 
 
@@ -419,6 +423,160 @@ def test_spark_top_k_over_multi_batch_partitions(spark, pair):
         spark.conf.set(key, old)
 
 
+def colloc_counts(texts, hits, window):
+    """Words within ±window tokens of each (doc_id, pos) hit whose doc
+    exists, counted from the tokens."""
+    n = Counter()
+    for d, p in hits:
+        if d < len(texts):
+            toks = tokenize(texts[d])
+            n.update(toks[max(0, p - window):p] + toks[p + 1:p + 1 + window])
+    return dict(n)
+
+
+def counts(df):
+    return {r["term"]: r["n"] for r in df.collect()}
+
+
+def term_hits(oi, term):
+    return sorted((d, p) for d, ps in oi.positions[term].items() for p in ps)
+
+
+def edge_hits(texts):
+    """(doc_id, pos) hits on the first and last token of the shortest doc,
+    the first one twice, the same in a longer doc, and a hit of no doc."""
+    lens = [len(tokenize(t)) for t in texts]
+    short = min((n, d) for d, n in enumerate(lens) if n)[1]
+    long_ = max(range(len(lens)), key=lens.__getitem__)
+    assert lens[short] < 5 < lens[long_]
+    return [(short, 0), (short, lens[short] - 1), (short, 0),
+            (long_, 0), (long_, lens[long_] - 1), (len(texts) + 5, 0)]
+
+
+@pytest.mark.parametrize("window", [0, 1, 2, 5])
+def test_collocations_in_the_driver_match_spark(spark, pair, picks, relations, window):
+    """collocations_hits over driver-path hits and a Corpus's docs runs in
+    the driver, with no job and no relation from the call through collect(),
+    and gives the forced-Spark Corpus's rows, the token scan's and the
+    counted answer: for a term's hits, for hits on a doc's first and last
+    token (duplicated, in a doc shorter than the window, one of no doc) and
+    for no hits."""
+    local, remote, oi, texts = pair
+    term, schema = picks[0][0], "doc_id long, pos int"
+    edge = edge_hits(texts)
+
+    def driver():
+        hits = local.spans_term(term).selectExpr("doc_id", "start as pos")
+        frames = [G.collocations_hits(h, local.docs, window) for h in (
+            hits, local_frame(spark, schema, pd.DataFrame(edge, columns=["doc_id", "pos"])),
+            local_frame(spark, schema))]
+        assert all(isinstance(df, LocalFrame) for df in frames)
+        return [counts(df) for df in frames], [df.schema for df in frames]
+
+    relations.clear()
+    (got, schemas), jobs = run(spark, driver)
+    assert (jobs, relations) == (0, [])
+    want = [colloc_counts(texts, term_hits(oi, term), window), colloc_counts(texts, edge, window), {}]
+    assert got == want and (window == 0) == (got[0] == {})
+    on_spark = [G.collocations_hits(h, remote.docs, window) for h in (
+        remote.spans_term(term).selectExpr("doc_id", "start as pos"),
+        spark.createDataFrame(edge, schema), spark.createDataFrame([], schema))]
+    assert [counts(df) for df in on_spark] == want
+    assert [df.schema for df in on_spark] == schemas
+    assert counts(G.collocations(local.docs, term, window)) == want[0]
+
+
+def test_kwic_in_the_driver_matches_spark(spark, pair, relations):
+    """kwic_spans over driver-path spans and a Corpus's docs: a LocalFrame
+    in hit order with the Spark join's columns (doc_id first, every other
+    hit column kept) and rows, no relation; a zero-width hit has an empty
+    match and a hit of no doc is dropped."""
+    local, _, _, texts = pair
+    edge = edge_hits(texts)
+    rows_ = [(p, d, p + 1, f"h{i}") for i, (d, p) in enumerate(edge)]
+    rows_ += [(0, edge[0][0], 0, "zero"), (0, edge[3][0], 4, "wide")]
+    schema = "start int, doc_id long, end int, tag string"
+    relations.clear()
+    got = G.kwic_spans(local_frame(spark, schema, pd.DataFrame(
+        rows_, columns=["start", "doc_id", "end", "tag"])), local.docs, 2)
+    assert isinstance(got, LocalFrame)
+    got_rows = [tuple(r) for r in got.collect()]
+    assert relations == []
+    toks = [tokenize(t) for t in texts]
+    assert got_rows == [
+        (d, s, e, tag, " ".join(toks[d][max(0, s - 2):s]), " ".join(toks[d][s:e]),
+         " ".join(toks[d][e:e + 2]))
+        for s, d, e, tag in rows_ if d < len(texts)]
+    on_spark = G.kwic_spans(spark.createDataFrame(rows_, schema), local.docs, 2)
+    assert sorted(got_rows) == sorted(tuple(r) for r in on_spark.collect())
+    assert got.columns == on_spark.columns == [
+        "doc_id", "start", "end", "tag", "left", "match", "right"]
+
+
+def test_tiny_split_sends_the_docs_read_to_spark(spark, pair, picks):
+    """collocations_hits and kwic_spans over driver-path hits read the docs
+    in the driver while the hit docs' row groups fit in one Spark task's
+    split; one byte less and they join the docs on Spark, same answer."""
+    local = pair[0]
+    hits = local.spans_term(picks[0][0])
+    ids = np.unique(hits.table["doc_id"].to_numpy())
+    _, lo, hi, nbytes = local._footers("docs")
+    need = int(nbytes[np.searchsorted(ids, lo) < np.searchsorted(ids, hi, side="right")].sum())
+
+    def answer():
+        colloc = G.collocations_hits(hits.selectExpr("doc_id", "start as pos"), local.docs, 2)
+        kwic = G.kwic_spans(hits, local.docs, 2)
+        return (isinstance(colloc, LocalFrame), isinstance(kwic, LocalFrame),
+                counts(colloc), sorted(tuple(r) for r in kwic.collect()))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(need))
+        want, jobs = run(spark, answer)
+        spark.conf.set(key, str(need - 1))
+        got, spark_jobs = run(spark, answer)
+    finally:
+        spark.conf.set(key, saved)
+    assert want[:2] == (True, True) and want[2] and jobs == 0
+    assert got == (False, False, *want[2:]) and spark_jobs > 0
+
+
+def test_spark_positions_over_multi_batch_partitions(spark, pair):
+    """With 3-block Arrow batches, decode_position_blocks (mapInArrow) gets
+    a term's blocks in several batches per partition: forced-Spark
+    term_positions, spans_term and collocations_hits over them equal the
+    driver path and the oracle."""
+    local, remote, oi, texts = pair
+
+    def answers(c):
+        return (
+            sorted((r["doc_id"], r["tf"], list(r["positions"]))
+                   for r in c.term_positions("the").collect()),
+            spans(c.spans_term("the")),
+            counts(G.collocations_hits(
+                c.spans_term("the").selectExpr("doc_id", "start as pos"), c.docs, 2)),
+        )
+
+    hits = term_hits(oi, "the")
+    want = (
+        sorted((d, len(ps), ps) for d, ps in oi.positions["the"].items()),
+        [(d, p, p + 1) for d, p in hits],
+        colloc_counts(texts, hits, 2),
+    )
+    assert len(oi.positions["the"]) > 3 * 128  # more than one 3-block batch
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got_spark, jobs = run(spark, lambda: answers(remote))
+        got_local = answers(local)
+    finally:
+        spark.conf.set(key, old)
+    assert got_spark == got_local == want
+    assert jobs > 0
+
+
 def test_search_cache_does_not_persist_driver_results(spark, pair, picks):
     """The search cache persists only Spark-path frames: persist() on a
     LocalRelation would cost a job, and a hit must cost none either."""
@@ -560,8 +718,9 @@ def test_grouped_page_over_a_cache_hit_builds_no_relation(spark, pair, relations
 
 def test_a_transformation_builds_one_relation(spark, pair, relations):
     """The first JVM use of a driver result builds its one relation, which
-    later transformations reuse: filter, a join with docs and heavy_colloc's
-    selectExpr each give the rows the table implies."""
+    later transformations reuse: filter and a join with docs each give the
+    rows the table implies. heavy_colloc's selectExpr, a plain projection,
+    stays a LocalFrame and builds no relation of its own."""
     local = pair[0]
     dl = {r["doc_id"]: r["dl"] for r in local.doc_lengths().collect()}
     for name, df in driver_results(local).items():

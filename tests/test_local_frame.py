@@ -5,6 +5,7 @@ every schema the driver path returns, non-empty and empty. Transformations
 run on the relation, and a search-cache hit hands back the same LocalFrame."""
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as JvmFrame
 
@@ -136,3 +137,59 @@ def test_search_cache_hit_is_the_same_local_frame(lc):
         assert lc._search_cache.hits == 3
     finally:
         lc._search_cache = None
+
+
+@pytest.fixture
+def relations(spark, monkeypatch):
+    """The relations shipped to the JVM (createDataFrame calls) so far."""
+    made = []
+    create = type(spark).createDataFrame
+    monkeypatch.setattr(
+        type(spark), "createDataFrame",
+        lambda self, *a, **kw: made.append(1) or create(self, *a, **kw),
+    )
+    return made
+
+
+def test_plain_projection_stays_local(lc, relations):
+    """select of column names and selectExpr of names, each optionally
+    `AS alias`, are LocalFrames over the table's columns, built with no
+    relation; their names, types and rows are the relation's."""
+    spans = lc.find_cql('"the"')
+    cases = [
+        ("selectExpr", ("doc_id", "start as pos")),
+        ("selectExpr", ("end", "start AS s", "doc_id")),
+        ("select", ("doc_id", "start")),
+    ]
+    local = [getattr(spans, m)(*args) for m, args in cases]
+    assert all(isinstance(df, LocalFrame) for df in local)
+    got = [(repr(df.collect()), df.schema) for df in local]
+    assert relations == []
+    want = [getattr(JvmFrame, m)(spans, *args) for m, args in cases]
+    assert got == [(repr(df.collect()), df.schema) for df in want]
+    assert [df.columns for df in local] == [
+        ["doc_id", "pos"], ["end", "s", "doc_id"], ["doc_id", "start"]]
+
+
+def test_other_projections_go_to_the_relation(lc):
+    """An expression, a Column, a name in other case, a name repeated and an
+    unknown name are projected by the relation: the same rows and schema,
+    or the same error."""
+    spans = lc.find_cql('"the"')
+    for m, args in [
+        ("selectExpr", ("start + 1 as s",)),
+        ("select", (F.col("start"),)),
+        ("selectExpr", ("DOC_ID",)),
+        ("select", ("doc_id", "doc_id")),
+        ("selectExpr", ("start as pos", "end as POS")),
+    ]:
+        got, want = getattr(spans, m)(*args), getattr(JvmFrame, m)(spans, *args)
+        assert not isinstance(got, LocalFrame)
+        assert (repr(got.collect()), got.schema) == (repr(want.collect()), want.schema)
+    for m in ("select", "selectExpr"):
+        errors = []
+        for call in (getattr(spans, m), lambda *a: getattr(JvmFrame, m)(spans, *a)):
+            with pytest.raises(AnalysisException) as e:
+                call("doc_id", "nope")
+            errors.append((e.value.getCondition(), e.value.getMessageParameters()))
+        assert errors[0] == errors[1]

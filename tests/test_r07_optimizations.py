@@ -36,7 +36,17 @@ def corpus(spark, tmp_path_factory):
     return Corpus(spark, path)
 
 
-def test_broadcast_hit_join_matches_shuffle_join(corpus):
+@pytest.fixture(scope="module")
+def on_spark(corpus):
+    """The same index with every query on Spark: hits that are a LocalFrame
+    would take collocations_hits' driver path, not a join."""
+    c = Corpus(corpus.spark, corpus.paths.root)
+    c._DRIVER_MAX_POSTINGS = -1
+    return c
+
+
+def test_broadcast_hit_join_matches_shuffle_join(on_spark):
+    corpus = on_spark
     h = corpus.spans_term("w0003").selectExpr("doc_id", "start as pos")
     saved = G._BROADCAST_HITS_CAP
     try:
@@ -54,7 +64,8 @@ def test_broadcast_hit_join_matches_shuffle_join(corpus):
     assert got == ref and len(ref) > 0
 
 
-def test_spans_terms_hint_yields_broadcast_join(corpus):
+def test_spans_terms_hint_yields_broadcast_join(on_spark):
+    corpus = on_spark
     h = corpus.spans_term("w0003").selectExpr("doc_id", "start as pos")
     plan = G.collocations_hits(h, corpus.docs, 2)._jdf.queryExecution() \
         .executedPlan().toString()
